@@ -16,7 +16,10 @@ import org.apache.spark.sql.SparkSession
   *    which Spark cannot read natively — see [[Tables]]).
   */
 object Sessions {
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Local core count: `SPARK_GRAFT_CPUS` when set (the deployment
+    * override), else every core the JVM sees. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
 
   /** `spark.network.timeout` for freeze-tolerant entry points (see
     * [[local]]'s `freezeTolerant`). Overridable per-invocation via the

@@ -1,6 +1,7 @@
 package graft.graphx
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Connected components via alternating large-star / small-star
@@ -22,8 +23,8 @@ import org.apache.spark.sql.functions._
   * shuffle-bounded, log-round shape. Both converge to the SAME labels
   * (component-min vertex id), so the two implementations cross-oracle
   * each other bit-exactly — StarComponentsSpec pins that on random and
-  * chain graphs, and tools.StarCcCheck replays it against the dumped
-  * 1M-node GraphX labels.
+  * chain graphs, and at 1M nodes every star label matched the GraphX
+  * labels (GRAPH_SCALE_r14.json `starcc_check`: 0 mismatches).
   *
   * Semantics per round (E is a set of undirected pairs, kept oriented
   * child > parent):
@@ -94,159 +95,30 @@ object StarComponents {
     * many times it. Tripping a 10× margin below keeps the worst
     * detected window group around the danger size even under a 10×
     * per-round jump; an INPUT super-hub above the margin still pays its
-    * one detection round at full size (measured: tools.SuperHubScale
-    * crosses the guard with a ~2e7-spoke hub and records that round's
-    * wall), which no reactive guard can avoid without a pre-pass. */
+    * one detection round at full size (measured with a 2e7-spoke hub:
+    * a 62 s round 0, then six fallback rounds, bench/superhub_r18.json),
+    * which no reactive guard can avoid without a pre-pass. */
   val SuperHubMargin = 10L
-
-  /** Edge-count ceiling for the TOY-REGIME round shape (r18, the r16
-    * round-collapse stretch). Below it a full-volume exchange is a
-    * couple of near-empty tasks and the per-round constant is
-    * SCHEDULER cost — AQE stage jobs (one per exchange), barrier jobs,
-    * `Observation.get` sync points, eager-checkpoint actions (the r12
-    * `LazyChainMaxNodes` regime, relationally). Two levers, both
-    * count-routed on the probe's exact per-round edge count:
-    *
-    *  1. COLLAPSE: rounds r and r+1 run as ONE lazy chain with ONE
-    *     materializing checkpoint — half the checkpoint actions and
-    *     probe sync points.
-    *  2. TOY CONF ([[withToyConf]]): the round executes with AQE off
-    *     and [[ToyShufflePartitions]] shuffle partitions, scoped and
-    *     restored around the materializing action (the
-    *     TransformSessions scoped-conf precedent). Without AQE an
-    *     entire barrier — six exchanges — is ONE scheduler job instead
-    *     of one job per exchange; AQE's runtime re-planning (partition
-    *     coalescing, broadcast conversion, skew splits) has nothing to
-    *     offer a ≤1e5-row fixed 3-stage round, which is why it is pure
-    *     overhead here and indispensable above the threshold.
-    *
-    * Above the threshold shuffle volume dominates and both levers
-    * would COST: convergence is only ever declared by the single-round
-    * exact anti-join confirm (a barrier that sees matching probes
-    * routes the NEXT round to the single form), so a fixpoint reached
-    * mid-barrier pays up to two extra rounds — one ~free scheduler job
-    * at ≤1e5 rows, real full-volume exchanges at 1e8 — and AQE must
-    * stay on for skew/coalesce. The at-scale shape is therefore
-    * UNCHANGED: big rounds run one-per-barrier under AQE, as measured
-    * by GraphScale/SuperHubScale. Structural guard safety: a window
-    * group can never exceed the symmetric edge count, so within a
-    * collapsed barrier groups stay ≤ 2·1e5 — far below any production
-    * trip threshold; the trip check still runs on every barrier's
-    * observations (tests with tiny thresholds route rounds from r+2 to
-    * the fallback exactly as in the single-round form; fallback rounds
-    * always run under AQE — they exist for huge volumes). */
-  val BarrierCollapseMaxEdges = 100000L
-
-  /** Shuffle partitions inside [[withToyConf]]: ≤1e5 rows split 4 ways
-    * is ~25k rows per task — parallel enough for a toy round, 8× fewer
-    * empty tasks than the session default of 32. */
-  val ToyShufflePartitions = 4
-
-  /** Scope (AQE off, [[ToyShufflePartitions]]) around a toy-regime
-    * round's build+materialize, restoring the caller's conf in a
-    * finally — the session-conf analogue of TransformSessions' scoped
-    * RocksDB provider. Safe because plans read these confs at their
-    * OWN execution, which happens inside `body` (the round's eager
-    * checkpoint), and the star loop is driver-sequential. */
-  private def withToyConf[T](spark: SparkSession)(body: => T): T = {
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", ToyShufflePartitions.toString)
-    try body finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-    }
-  }
 
   /** (id, label) for every vertex of `pairs` — one row per distinct
     * endpoint; label = component-min vertex id (bit-identical to GraphX
     * connectedComponents on the same pairs). `pairs` columns: (u, v),
     * one row per undirected pair (self-loops ignored). */
   def run(spark: SparkSession, pairs: DataFrame, maxRounds: Int = 64): DataFrame =
-    runWithRounds(spark, pairs, maxRounds)._1
+    runWithStats(spark, pairs, maxRounds)._1
 
-  /** [[run]] plus the number of large+small-star rounds executed — the
-    * round count IS the scale claim (log in component size, not
-    * diameter), so the at-scale tool records it. */
-  def runWithRounds(spark: SparkSession, pairs: DataFrame,
-      maxRounds: Int = 64): (DataFrame, Int) = {
-    val (labels, stats) = runWithStats(spark, pairs, maxRounds)
-    (labels, stats.rounds)
-  }
-
-  /** One window-form contraction round (large star, small star,
-    * round-final distinct) as a LAZY plan over `in`, with the two
-    * guard-group observations attached — shared by the single-round
-    * path and the collapsed barrier (r18). `symViaExplode` picks the
-    * symmetric-closure shape: `unionAll` for a MATERIALIZED input (two
-    * cheap checkpoint scans, the historical shape); `explode` for a
-    * mid-barrier input referenced once — a self-union there would
-    * duplicate the entire upstream round subplan into both branches
-    * (the g11 CTE-inlining lesson) and double-fire its observations.
-    * Both shapes emit exactly one (u,v) and one (v,u) row per input
-    * row, so the round result is identical. */
-  private def windowRoundPlan(in: DataFrame, symViaExplode: Boolean)
-      : (DataFrame, org.apache.spark.sql.Observation, org.apache.spark.sql.Observation) = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("u")
-    val sym =
-      if (symViaExplode)
-        in.select(explode(array(struct(col("u"), col("v")),
-          struct(col("v").as("u"), col("u").as("v")))).as("e"))
-          .select(col("e.u").as("u"), col("e.v").as("v"))
-      else in.unionAll(in.select(col("v").as("u"), col("u").as("v")))
-    // ---- large-star -------------------------------------------------
-    // No intermediate distinct on the large-star output: duplicates
-    // ((v,m) reached via two hooks) are bounded by the per-EDGE
-    // emission (≤ one row per symmetric entry with v > u, so ≤ |E|
-    // rows) and the round-final distinct removes them anyway — a
-    // mid-round dedup was a full extra exchange of the same volume
-    // every round at every scale (removed r16). The `grp` column is
-    // the super-hub guard: count over the SAME window spec rides the
-    // min's WindowExec (same exchange, same sort), and the max is
-    // collected as observed metrics on the materializing job — zero
-    // extra actions, zero extra exchanges (observed BEFORE the v > u
-    // filter so a neighborhood-max vertex still reports its group).
-    val largeObs = new org.apache.spark.sql.Observation()
-    val large = sym
-      .select(col("u"), col("v"), least(min("v").over(w), col("u")).as("m"),
-        count(lit(1)).over(w).as("grp"))
-      .observe(largeObs, coalesce(max("grp"), lit(0L)).as("maxgrp"))
-      .where(col("v") > col("u"))
-      .select(col("v").as("u"), col("m").as("v"))
-      .where(col("u") =!= col("v"))
-    // ---- small-star -------------------------------------------------
-    val smallObs = new org.apache.spark.sql.Observation()
-    val out = large
-      .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-      .select(col("u"), col("v"), min("v").over(w).as("m"),
-        count(lit(1)).over(w).as("grp"))
-      .observe(smallObs, coalesce(max("grp"), lit(0L)).as("maxgrp"))
-      .select(explode(array(col("v"), col("u"))).as("c"), col("m"))
-      .where(col("c") =!= col("m"))
-      .select(col("c").as("u"), col("m").as("v"))
-      .distinct()
-    (out, largeObs, smallObs)
-  }
-
-  private def maxGrpOf(obs: org.apache.spark.sql.Observation*): Long =
-    obs.map(_.get("maxgrp").asInstanceOf[Long]).max
-
-  /** [[runWithRounds]] plus [[StarStats]] — `superHubDegree` is the
-    * guard DANGER size (the trip fires a [[SuperHubMargin]] below it;
-    * tests pass a small value to force the fallback; production callers
-    * keep [[DefaultSuperHubDegree]]). Labels are bit-identical on every
-    * route: both round forms compute the same exact neighborhood
-    * minima. `onRound` is invoked after each round with
-    * (`"r<i>_window"` | `"r<i>_window2"` | `"r<i>_fallback"`, wall
-    * seconds) — `window2` is a collapsed barrier covering rounds i and
-    * i+1 (see [[BarrierCollapseMaxEdges]]; `collapseMaxEdges` = 0
-    * disables collapsing, tests use it for the A/B job-count pin) —
-    * the at-scale tools record per-round walls through it. */
+  /** [[run]] plus [[StarStats]] — `superHubDegree` is the guard DANGER
+    * size (the trip fires a [[SuperHubMargin]] below it; tests pass a
+    * small value to force the fallback; production callers keep
+    * [[DefaultSuperHubDegree]]). Labels are bit-identical on both round
+    * forms: each computes the same exact neighborhood minima. The round
+    * count IS the scale claim (log in component size, not diameter).
+    * `onRound` is invoked after each round with (`"r<i>_window"` |
+    * `"r<i>_fallback"`, wall seconds) — the at-scale tools record
+    * per-round walls through it. */
   def runWithStats(spark: SparkSession, pairs: DataFrame, maxRounds: Int = 64,
       superHubDegree: Long = DefaultSuperHubDegree,
-      onRound: (String, Double) => Unit = (_, _) => (),
-      collapseMaxEdges: Long = BarrierCollapseMaxEdges): (DataFrame, StarStats) = {
+      onRound: (String, Double) => Unit = (_, _) => ()): (DataFrame, StarStats) = {
     // The probe RIDES the eager checkpoint's materializing job as
     // observed metrics (CollectMetricsExec = accumulators, no exchange,
     // no extra plan node cost): one job materializes the round AND
@@ -255,22 +127,15 @@ object StarComponents {
     // RE-SCANNED the checkpointed output — at toy scale that was one of
     // two scheduler round trips per round, at 1M nodes a full extra pass
     // over the edge list per round (r15 verdict item 3).
-    def probeObs(d: DataFrame): (DataFrame, org.apache.spark.sql.Observation) = {
-      val obs = new org.apache.spark.sql.Observation()
-      (d.observe(obs,
+    def probed(d: DataFrame): (DataFrame, (Long, Long)) = {
+      val obs = new Observation()
+      val out = d.observe(obs,
         count(lit(1)).as("n"),
         coalesce(sum(expr(
-          "((u % 1000000007) * 31 + (v % 1000000007)) % 1000000007")), lit(0L)).as("cks")),
-        obs)
-    }
-    def probeOf(obs: org.apache.spark.sql.Observation): (Long, Long) = {
+          "((u % 1000000007) * 31 + (v % 1000000007)) % 1000000007")), lit(0L)).as("cks"))
+        .localCheckpoint() // EAGER — the materialization fires the metrics
       val m = obs.get
-      (m("n").asInstanceOf[Long], m("cks").asInstanceOf[Long])
-    }
-    def probed(d: DataFrame): (DataFrame, (Long, Long)) = {
-      val (observed, obs) = probeObs(d)
-      val out = observed.localCheckpoint() // EAGER — the materialization fires the metrics
-      (out, probeOf(obs))
+      (out, (m("n").asInstanceOf[Long], m("cks").asInstanceOf[Long]))
     }
 
     val (e0, probe0) = probed(pairs
@@ -301,57 +166,23 @@ object StarComponents {
     // also covers the fixpoint mega-star a giant component inherently
     // becomes).
     //
-    // r18 round collapse: once past round 0 and below
-    // `collapseMaxEdges`, TWO window rounds run as one lazy chain with
-    // ONE materializing checkpoint (the scheduler-latency regime — see
-    // BarrierCollapseMaxEdges). Round 0 always runs single so an
-    // already-converged input still confirms in one round. Convergence
-    // is only ever DECLARED by the single-round branch's exact
-    // anti-join confirm: a barrier that observes any matching probe
-    // pair (mid vs entry, last vs mid, last vs entry) routes the next
-    // iteration to the single form, which re-detects the repeat against
-    // a MATERIALIZED pair and confirms exactly — so collapsing can
-    // delay detection by ≤2 rounds but can never mis-declare, and a
-    // probe-checksum collision degrades to one routed single round,
-    // never to a wrong result.
+    // Every round runs under the session's AQE conf at every size. A
+    // toy-size variant (two rounds per checkpoint, AQE off) cut the
+    // scheduler jobs 2.3-3.5x but left walls at parity
+    // (bench/star_toy_ab_r18_s*.json), so there is one round shape.
+    val w = Window.partitionBy("u")
     var prevProbe = probe0
     var converged = prevProbe._1 == 0L
     var r = 0
     var maxGroup = 0L
     var combinerFrom = -1
-    var probeMatched = false
     while (!converged && r < maxRounds) {
-      // Toy regime (count-routed per iteration — mid-run entry is normal
-      // as the edge list shrinks): AQE off + few shuffle partitions for
-      // this round's execution, see BarrierCollapseMaxEdges. Fallback
-      // rounds always run under AQE.
-      val toy = combinerFrom < 0 && collapseMaxEdges > 0 &&
-        prevProbe._1 <= collapseMaxEdges
-      def iterate(): Unit = {
       val roundT0 = System.nanoTime()
-      if (combinerFrom < 0 && !probeMatched && r > 0 && r + 1 < maxRounds &&
-          prevProbe._1 <= collapseMaxEdges) {
-        // ---- collapsed barrier: rounds r and r+1, one checkpoint --------
-        val (mid0, lObs1, sObs1) = windowRoundPlan(e, symViaExplode = false)
-        val (mid, midObs) = probeObs(mid0)
-        val (last0, lObs2, sObs2) = windowRoundPlan(mid, symViaExplode = true)
-        val (next, probe) = probed(last0) // fires all five observations
-        val probeMid = probeOf(midObs)
-        val grp = maxGrpOf(lObs1, sObs1, lObs2, sObs2)
-        maxGroup = math.max(maxGroup, grp)
-        // Structurally grp ≤ 2·collapseMaxEdges here, so a production
-        // threshold can't trip mid-barrier; tiny test thresholds can,
-        // and route every round from r+2 to the fallback.
-        if (grp > superHubDegree / SuperHubMargin) combinerFrom = r + 2
-        probeMatched = probe == prevProbe || probe == probeMid || probeMid == prevProbe
-        onRound(s"r${r}_window2", (System.nanoTime() - roundT0) / 1e9)
-        prevProbe = probe
-        releaseCheckpoint(e)
-        e = next
-        r += 2
-      } else {
-      val (next, probe) = if (combinerFrom >= 0) {
-        val sym = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
+      val fallback = combinerFrom >= 0
+      val sym = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
+      val largeObs = new Observation()
+      val smallObs = new Observation()
+      val (next, probe) = if (fallback) {
         // ---- super-hub fallback round (combiner-friendly) ---------------
         // groupBy+join per-vertex minima: partial aggregation combines
         // map-side, so no single task ever holds a whole neighborhood —
@@ -366,7 +197,6 @@ object StarComponents {
         // materialization per the r17 intermediate-Observation idiom), so
         // StarStats.maxGroup is the run's TRUE peak: the mega-star keeps
         // growing after the switch (ADVICE r17).
-        val largeObs = new org.apache.spark.sql.Observation()
         val mins = sym.groupBy("u").agg(min("v").as("m"), count(lit(1)).as("grp"))
           .observe(largeObs, coalesce(max("grp"), lit(0L)).as("maxgrp"))
           .select(col("u"), least(col("m"), col("u")).as("m"))
@@ -381,7 +211,6 @@ object StarComponents {
         val o = large
           .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
           .localCheckpoint()
-        val smallObs = new org.apache.spark.sql.Observation()
         val mins2 = o.groupBy("u").agg(min("v").as("m"), count(lit(1)).as("grp"))
           .observe(smallObs, coalesce(max("grp"), lit(0L)).as("maxgrp"))
           .select(col("u"), col("m"))
@@ -391,24 +220,44 @@ object StarComponents {
           .select(col("c").as("u"), col("m").as("v"))
           .distinct())
         releaseCheckpoint(o)
-        val (ml, ms) = (largeObs.get, smallObs.get)
-        maxGroup = math.max(maxGroup,
-          math.max(ml("maxgrp").asInstanceOf[Long], ms("maxgrp").asInstanceOf[Long]))
         out
       } else {
-        // ---- window form, the normal single-round path -------------------
-        val (out0, largeObs, smallObs) = windowRoundPlan(e, symViaExplode = false)
-        val out = probed(out0)
-        val grp = maxGrpOf(largeObs, smallObs)
-        maxGroup = math.max(maxGroup, grp)
-        // Trip a SuperHubMargin below the danger size (see SuperHubMargin:
-        // sizes grow multiplicatively, so waiting for the danger size
-        // itself means the detection round already ran well past it).
-        if (grp > superHubDegree / SuperHubMargin) combinerFrom = r + 1
-        out
+        // ---- window form, the normal round ------------------------------
+        // No intermediate distinct on the large-star output: duplicates
+        // ((v,m) reached via two hooks) are bounded by the per-EDGE
+        // emission (≤ one row per symmetric entry with v > u, so ≤ |E|
+        // rows) and the round-final distinct removes them anyway — a
+        // mid-round dedup was a full extra exchange of the same volume
+        // every round at every scale (removed r16). The `grp` column is
+        // the super-hub guard: count over the SAME window spec rides the
+        // min's WindowExec (same exchange, same sort), and the max is
+        // collected as observed metrics on the materializing job — zero
+        // extra actions, zero extra exchanges (observed BEFORE the v > u
+        // filter so a neighborhood-max vertex still reports its group).
+        val large = sym
+          .select(col("u"), col("v"), least(min("v").over(w), col("u")).as("m"),
+            count(lit(1)).over(w).as("grp"))
+          .observe(largeObs, coalesce(max("grp"), lit(0L)).as("maxgrp"))
+          .where(col("v") > col("u"))
+          .select(col("v").as("u"), col("m").as("v"))
+          .where(col("u") =!= col("v"))
+        probed(large
+          .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
+          .select(col("u"), col("v"), min("v").over(w).as("m"),
+            count(lit(1)).over(w).as("grp"))
+          .observe(smallObs, coalesce(max("grp"), lit(0L)).as("maxgrp"))
+          .select(explode(array(col("v"), col("u"))).as("c"), col("m"))
+          .where(col("c") =!= col("m"))
+          .select(col("c").as("u"), col("m").as("v"))
+          .distinct())
       }
-      probeMatched = false
-      onRound(s"r${r}_${if (combinerFrom >= 0 && combinerFrom <= r) "fallback" else "window"}",
+      val grp = Seq(largeObs, smallObs).map(_.get("maxgrp").asInstanceOf[Long]).max
+      maxGroup = math.max(maxGroup, grp)
+      // Trip a SuperHubMargin below the danger size (see SuperHubMargin:
+      // sizes grow multiplicatively, so waiting for the danger size
+      // itself means the detection round already ran well past it).
+      if (!fallback && grp > superHubDegree / SuperHubMargin) combinerFrom = r + 1
+      onRound(s"r${r}_${if (fallback) "fallback" else "window"}",
         (System.nanoTime() - roundT0) / 1e9)
       if (probe == prevProbe) {
         // Exact confirmation: equal counts + empty one-direction
@@ -425,9 +274,6 @@ object StarComponents {
       releaseCheckpoint(e)
       e = next
       r += 1
-      }
-      }
-      if (toy) withToyConf(spark)(iterate()) else iterate()
     }
     require(converged, s"star contraction did not converge in $maxRounds rounds")
     // Children point at their root; roots (and isolated vertices — any

@@ -87,13 +87,16 @@ object EgoGraphs {
 
     // Circle overlay: members not in the friend set are dropped
     // (main.js:292); each membership adds a "circleN" -> "yes" property
-    // (main.js:271-281) and an entry in the circles array.
+    // (main.js:271-281) and an entry in the circles array. A member
+    // listed twice for one circle is one membership (the JS assignment
+    // is idempotent): collect_set dedups (ego, circle, member) once, and
+    // the property map is built from that deduplicated array.
     val memberCircles = SnapSource.circles(spark, dataDir)
       .join(friends.select(col("ego"), col("name").as("member")), Seq("ego", "member"), "left_semi")
       .groupBy(col("ego"), col("member").as("node"))
-      .agg(
-        array_sort(collect_list(col("circle"))).as("circles"),
-        map_from_entries(collect_list(struct(col("circle"), lit("yes")))).as("circle_props"))
+      .agg(array_sort(collect_set(col("circle"))).as("circles"))
+      .withColumn("circle_props",
+        map_from_arrays(col("circles"), transform(col("circles"), _ => lit("yes"))))
 
     val names = friends.select(col("ego"), col("name"), lit(false).as("is_ego"))
       .unionByName(

@@ -281,7 +281,7 @@ object GraphSuite {
     // and star contraction must agree under the driver's gate, the
     // g07/g10 dual-implementation discipline applied to CC. At 1M nodes
     // the star path runs 5 rounds / 54 s vs GraphX's 608 s
-    // (GRAPH_SCALE_r14.json + tools.StarCcCheck, 0 label mismatches).
+    // (GRAPH_SCALE_r14.json `starcc_check`, 0 label mismatches).
     QuerySpec("g13_cc_star",
       (s, _) => graft.graphx.GraphxAnalytics.componentStatsStar(
         s, dataDir, Seq("348", "3980", "414", "686", "698")),

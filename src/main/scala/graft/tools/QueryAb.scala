@@ -1,168 +1,60 @@
 package graft.tools
 
-import graft.Sessions
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.{Sessions, SparkEntry}
 
-/** Same-JVM A/B for r19 query reshapes. Cross-JVM walls on this host swing
-  * with page-cache/heap/ambient state, so each experiment times the OLD
-  * declared shape (inlined verbatim) and the NEW candidate back to back,
-  * alternating arms (old,new,old,new,...), in ONE session — same JIT, same
-  * page cache — and asserts both arms produce IDENTICAL result rows before
-  * any wall is reported.
+/** Query timing in one session — the iteration loop for plan tuning and
+  * the same-JVM A/B for declared-query reshapes. Cross-JVM walls swing
+  * with page-cache/heap/ambient state, so an A/B times both arms back to
+  * back, alternating (a,b,a,b,...), in ONE session — same JIT, same page
+  * cache — after asserting both arms produce IDENTICAL sorted result
+  * rows. Each timed run is a noop write, the Bench action (materializes
+  * every row, no sink I/O); one untimed warm-up run per arm comes first.
   *
-  * Usage: QueryAb <experiment> <outJson> [roundsPerArm]
-  *   experiments: q115, q93
-  * SPARK_GRAFT_SF_DIR selects the fixture.
+  * Usage: QueryAb <query> [<query2>] [rounds]   (rounds defaults to 4)
+  *   One query: times it. Two: row-identity check, then the A/B.
+  *   Queries are `SparkEntry.queries` names; to A/B a reshape, declare the
+  *   candidate as a query. SPARK_GRAFT_SF_DIR selects the fixture.
+  * Prints one JSON line after the GRAFT_QUERYAB_JSON marker. The r19
+  * reshape results (q115 union form, q93 stream-side repartition) are in
+  * bench/query_ab_r19_*.json.
   */
 object QueryAb {
-
-  private def t(s: SparkSession, d: String, name: String): DataFrame =
-    graft.Tables(s, d, name)
-
-  // ---- q115_profile ----
-  /** OLD (pre-r19 declared shape, inlined verbatim so the A/B stays
-    * reproducible after the suite switched to the union form): one wide
-    * agg with 6 countDistinct → Catalyst Expand ×7, and the string
-    * min/max first() buffers force SORT aggregation over the expanded
-    * rows. */
-  private def q115Old(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders")
-      .agg(
-        count(col("o_orderkey")).as("nn1"), countDistinct(col("o_orderkey")).as("nd1"),
-        min(col("o_orderkey")).cast("string").as("mn1"), max(col("o_orderkey")).cast("string").as("mx1"),
-        count(col("o_custkey")).as("nn2"), countDistinct(col("o_custkey")).as("nd2"),
-        min(col("o_custkey")).cast("string").as("mn2"), max(col("o_custkey")).cast("string").as("mx2"),
-        count(col("o_orderstatus")).as("nn3"), countDistinct(col("o_orderstatus")).as("nd3"),
-        min(col("o_orderstatus")).as("mn3"), max(col("o_orderstatus")).as("mx3"),
-        count(col("o_totalprice")).as("nn4"), countDistinct(col("o_totalprice")).as("nd4"),
-        min(col("o_totalprice")).cast("decimal(18,2)").cast("string").as("mn4"),
-        max(col("o_totalprice")).cast("decimal(18,2)").cast("string").as("mx4"),
-        count(col("o_orderdate")).as("nn5"), countDistinct(col("o_orderdate")).as("nd5"),
-        min(col("o_orderdate")).cast("date").cast("string").as("mn5"),
-        max(col("o_orderdate")).cast("date").cast("string").as("mx5"),
-        count(col("o_orderpriority")).as("nn6"), countDistinct(col("o_orderpriority")).as("nd6"),
-        min(col("o_orderpriority")).as("mn6"), max(col("o_orderpriority")).as("mx6"))
-      .select(expr("stack(6, " +
-        "'o_orderkey', nn1, nd1, mn1, mx1, " +
-        "'o_custkey', nn2, nd2, mn2, mx2, " +
-        "'o_orderstatus', nn3, nd3, mn3, mx3, " +
-        "'o_totalprice', nn4, nd4, mn4, mx4, " +
-        "'o_orderdate', nn5, nd5, mn5, mx5, " +
-        "'o_orderpriority', nn6, nd6, mn6, mx6) " +
-        "AS (col_name, n_nonnull, n_distinct, min_s, max_s)"))
-      .orderBy("col_name")
-
-  /** NEW: the r19 declared shape — one single-distinct aggregate per
-    * column (no Expand — a single distinct group plans as
-    * partial-group-by-value, not Expand), unioned. Parquet is columnar so
-    * the 6 scans read the same total bytes as the old form's one 6-column
-    * scan; the ×7 row blowup disappears. */
-  private def q115New(s: SparkSession, d: String): DataFrame =
-    graft.SparkEntry.queries("q115_profile")(s, d)
-
-  // ---- q93_fuzzy_match ----
-  /** OLD (pre-§2.2b declared shape, inlined verbatim so the A/B stays
-    * reproducible after the suite gained the stream-side repartition): the
-    * streamed side of the broadcast self-join is the raw filtered scan —
-    * one file split, so every blocked levenshtein runs in ONE task. */
-  private def q93Old(s: SparkSession, d: String): DataFrame = {
-    val p = t(s, d, "part").filter(col("p_partkey") < 5000)
-      .select(col("p_partkey"), col("p_name"),
-        substring_index(col("p_name"), " ", 1).as("blk"))
-    val a = p.select(col("blk"), col("p_partkey").as("a_id"), col("p_name").as("a_name"))
-    val b = p.select(col("blk"), col("p_partkey").as("b_id"), col("p_name").as("b_name"))
-    a.join(b, Seq("blk")).filter(col("a_id") < col("b_id"))
-      .withColumn("dist", levenshtein(col("a_name"), col("b_name")))
-      .filter(col("dist") <= 4)
-      .groupBy("dist")
-      .agg(count(lit(1)).as("n_pairs"), sum(col("a_id") + col("b_id")).as("checksum"))
-      .orderBy("dist")
-  }
-
-  /** NEW: threshold-bounded levenshtein (Spark 3.5+ 3-arg form): the DP is
-    * banded at the cutoff, returning -1 above it — so `dist >= 0` selects
-    * exactly the old `dist <= 4` rows with identical dist values.
-    * MEASURED SLOWER and REJECTED in r19 (0.92×/0.89× in two same-JVM
-    * sessions, bench/query_ab_r19_q93_s{1,2}.json): p_name blocks pair
-    * short similar-length strings, so the banded DP's per-call threshold
-    * bookkeeping exceeds the saved cells. Re-measure if the blocking key
-    * ever loosens to long/dissimilar strings. */
-  private def q93New(s: SparkSession, d: String): DataFrame = {
-    val p = t(s, d, "part").filter(col("p_partkey") < 5000)
-      .select(col("p_partkey"), col("p_name"),
-        substring_index(col("p_name"), " ", 1).as("blk"))
-    val a = p.select(col("blk"), col("p_partkey").as("a_id"), col("p_name").as("a_name"))
-    val b = p.select(col("blk"), col("p_partkey").as("b_id"), col("p_name").as("b_name"))
-    a.join(b, Seq("blk")).filter(col("a_id") < col("b_id"))
-      .withColumn("dist", levenshtein(col("a_name"), col("b_name"), 4))
-      .filter(col("dist") >= 0)
-      .groupBy("dist")
-      .agg(count(lit(1)).as("n_pairs"), sum(col("a_id") + col("b_id")).as("checksum"))
-      .orderBy("dist")
-  }
-
-  /** NEW (r19, second pass): same declared shape, but the STREAMED side of
-    * the broadcast self-join is repartitioned before the join. The declared
-    * plan's stream side is the filtered part scan — a single ~100 KB file
-    * split at sf0.1 — so ALL ~1.56 M blocked levenshtein evaluations (8
-    * blocks, max 669 rows) serialize into ONE task (the r10
-    * approxSimilarityJoin lesson: quadratic per-block verify work runs at
-    * the stream side's partitioning, not input-proportional). Hash
-    * repartition on the high-cardinality a_id spreads the pair generation
-    * evenly; the explicit numPartitions keeps AQE from coalescing the tiny
-    * (5000-row) exchange back to one partition. Results identical: the
-    * broadcast join has no clustering requirement on the stream side.
-    * MEASURED AND APPLIED in r19 (3.63×/3.85× in two same-JVM 32-core
-    * sessions, 3.40× at 8 cores — bench/query_ab_r19_q93p_*.json); this is
-    * the declared shape since then. */
-  private def q93Par(s: SparkSession, d: String): DataFrame =
-    graft.SparkEntry.queries("q93_fuzzy_match")(s, d)
-
   def main(args: Array[String]): Unit = {
-    val exp = args(0)
-    val outPath = args(1)
-    val rounds = if (args.length > 2) args(2).toInt else 4
+    val queries = SparkEntry.queries
+    val (names, rest) = args.toSeq.span(queries.contains)
+    require(names.nonEmpty && names.size <= 2 && rest.size <= 1 && rest.forall(_.toIntOption.isDefined),
+      s"usage: QueryAb <query> [<query2>] [rounds], queries named as in SparkEntry.queries; " +
+        s"got: ${args.mkString(" ")}")
+    val rounds = rest.headOption.fold(4)(_.toInt)
+    val arms = names.map(queries)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local("graft-query-ab", freezeTolerant = true)
 
-    val (oldF, newF): ((SparkSession, String) => DataFrame, (SparkSession, String) => DataFrame) =
-      exp match {
-        case "q115" => (q115Old, q115New)
-        case "q93"  => (q93Old, q93New)
-        case "q93p" => (q93Old, q93Par)
-        case other  => sys.error(s"unknown experiment $other")
-      }
+    // A/B result identity first (outside any timed window): sorted row strings.
+    if (arms.size == 2) {
+      val Seq(a, b) = arms.map(_(spark, sfDir).collect().map(_.toString).sorted.toSeq)
+      require(a == b, s"${names.mkString(" and ")} disagree: ${a.size} vs ${b.size} rows; " +
+        s"first diff: ${a.zip(b).find(p => p._1 != p._2)}")
+    }
 
-    // Result identity first (outside any timed window): sorted row strings.
-    val oldRows = oldF(spark, sfDir).collect().map(_.toString).sorted.toSeq
-    val newRows = newF(spark, sfDir).collect().map(_.toString).sorted.toSeq
-    require(oldRows == newRows,
-      s"old/new disagree: ${oldRows.size} vs ${newRows.size} rows; " +
-        s"first diff: ${oldRows.zip(newRows).find(p => p._1 != p._2)}")
-
-    def timeArm(f: (SparkSession, String) => DataFrame): Double = {
+    def timeArm(i: Int): Double = {
       val t0 = System.nanoTime()
-      f(spark, sfDir).write.format("noop").mode("overwrite").save()
+      arms(i)(spark, sfDir).write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
-    // Warmup both arms once, then alternate old/new `rounds` times each.
-    timeArm(oldF); timeArm(newF)
-    val walls = (1 to rounds).map { _ => (timeArm(oldF), timeArm(newF)) }
-    val oldW = walls.map(_._1); val newW = walls.map(_._2)
+    arms.indices.foreach(timeArm)
+    val walls = (1 to rounds).map(_ => arms.indices.map(timeArm)).transpose
 
     def fmt(d: Double) = "%.3f".format(d)
-    def arr(xs: Seq[Double]) = xs.map(fmt).mkString("[", ",", "]")
-    val json =
-      s"""{"metric":"query_ab","experiment":"$exp","sf_dir":"$sfDir","rows":${oldRows.size},""" +
-        s""""old_walls_sec":${arr(oldW)},"new_walls_sec":${arr(newW)},""" +
-        s""""old_min":${fmt(oldW.min)},"new_min":${fmt(newW.min)},""" +
-        s""""old_median":${fmt(oldW.sorted.apply(oldW.size / 2))},""" +
-        s""""new_median":${fmt(newW.sorted.apply(newW.size / 2))},""" +
-        s""""speedup_min_over_min":${fmt(oldW.min / newW.min)}}"""
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json)
+    val perArm = names.zip(walls).map { case (n, w) =>
+      s""""$n":{"walls_sec":${w.map(fmt).mkString("[", ",", "]")},""" +
+        s""""min":${fmt(w.min)},"median":${fmt(w.sorted.apply(w.size / 2))}}"""
+    }
+    val speedup =
+      if (walls.size == 2) s""","speedup_min_over_min":${fmt(walls(0).min / walls(1).min)}""" else ""
     println("GRAFT_QUERYAB_JSON")
-    println(json)
+    println(s"""{"metric":"query_ab","sf_dir":"$sfDir",""" +
+      s"""${perArm.mkString(",")}$speedup}""")
     spark.stop()
   }
 }

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.{Sessions, Tables}
 import graft.ext.{DedupSuite, SimilaritySuite}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** At-scale gates for the APPROXIMATE operators (r9 verdict item 4): the
@@ -35,7 +35,54 @@ import org.apache.spark.sql.functions._
   * nonzero if any gate fails. Usage: RecallGate <derivedSfDir> <outJson>
   */
 object RecallGate {
-  import RecallCommon.{recallOf, vecBase, withProbe}
+
+  /** The derive_scale.py vec_id copy offset (id-shifted exact duplicates). */
+  private val CopyOffset = 100000L
+
+  /** The embeddings corpus as (vec_id, arr DOUBLE[]) — the exact-scoring
+    * representation every recall computation runs against. */
+  private def vecBase(s: SparkSession, d: String): DataFrame =
+    Tables(s, d, "embeddings")
+      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("arr"))
+
+  /** Probe ids spanning distinct copies of the derived fixture: two
+    * base-copy probes plus one per later copy (up to two). */
+  private def copyProbes(spark: SparkSession, base0: DataFrame): Seq[Long] = {
+    import spark.implicits._
+    // bounded-collect: one row per derive_scale copy (≤ the copy factor)
+    val copyOffsets = base0.select((col("vec_id") / CopyOffset).cast("long"))
+      .distinct().as[Long].collect().sorted
+    Seq(0L, 117L) ++ copyOffsets.drop(1).take(2).map(_ * CopyOffset + 117L)
+  }
+
+  /** `base0` with probe `p`'s vector as a literal `pvec` column (the form
+    * the metric expressions `array_dot(arr, pvec)` score against). */
+  private def withProbe(base0: DataFrame, p: Long): DataFrame =
+    base0.withColumn("pvec",
+      typedLit(base0.filter(col("vec_id") === p).head().getSeq[Double](1)))
+
+  /** Tie-robust recall@k: fraction of returned ids whose exact score ties
+    * or beats the exact k-th score in `metricCol` (1e-9 slack for
+    * engine-side rounding). Tie-robustness matters on copy fixtures:
+    * every vector has exact duplicates, so WHICH of ten identical copies
+    * an index returns must not be graded as a miss. */
+  private def recallOf(base: DataFrame, metricCol: Column, probeId: Long, k: Int,
+      returned: Seq[Long]): Double = {
+    // bounded-collect: exactly k rows
+    val kth = base.filter(col("vec_id") =!= probeId)
+      .select(metricCol.as("score"))
+      .orderBy(col("score").desc).limit(k)
+      .collect().map(_.getDouble(0)).min
+    if (returned.isEmpty) 0.0
+    else {
+      // bounded-collect: one row per returned candidate (≤ k)
+      val scores = base.filter(col("vec_id").isin(returned.map(Long.box): _*))
+        .select(col("vec_id"), metricCol.as("score"))
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      returned.count(id => scores.getOrElse(id, Double.NegativeInfinity) >= kth - 1e-9)
+        .toDouble / k
+    }
+  }
 
   /** All gates over a derived copy-structured fixture dir; returns
     * (metrics, failures). Callable from the CLI main (sf1/sf10 on-demand
@@ -50,7 +97,7 @@ object RecallGate {
     val base0 = vecBase(spark, sfDir)
     val nVecs = base0.count()
     // Probes span distinct copies of the derived fixture (offset 100000).
-    val probes: Seq[Long] = RecallCommon.copyProbes(spark, base0)
+    val probes: Seq[Long] = copyProbes(spark, base0)
 
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -62,8 +109,7 @@ object RecallGate {
     def meanRecall(entry: String, run: Long => Seq[Long],
         metric: org.apache.spark.sql.Column): Double = {
       val rs = probes.map { p =>
-        val (withP, _) = withProbe(base0, p)
-        recallOf(withP, metric, p, k, run(p))
+        recallOf(withProbe(base0, p), metric, p, k, run(p))
       }
       System.err.println(s"[recall] $entry per-probe: ${rs.mkString(", ")}")
       rs.sum / rs.size
@@ -103,8 +149,7 @@ object RecallGate {
       .select("probe_id", "cand_id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
     val batchRecalls = (0L until 50L).map { p =>
-      val (withP, _) = withProbe(base0, p)
-      recallOf(withP, cosM, p, k, batch.getOrElse(p, Seq.empty))
+      recallOf(withProbe(base0, p), cosM, p, k, batch.getOrElse(p, Seq.empty))
     }
     gate("q70_batch_mean_recall_at10", batchRecalls.sum / batchRecalls.size, minRecall)
 
@@ -135,7 +180,7 @@ object RecallGate {
     // within-cell pair work stays ~Σ|cell|²-bounded: 64 cells at the ~sf1
     // fixture (20k vecs), 500 at the ~sf10 one (200k vecs) — ~N/400,
     // floored at the sf1 value so the committed sf1 artifact is stable.
-    val nBase = base0.filter(col("vec_id") < 100000L).count()
+    val nBase = base0.filter(col("vec_id") < CopyOffset).count()
     val nlist91 = math.max(64L, nVecs / 400L).toInt
     results("q91_nlist") = nlist91.toDouble
     val sem = SimilaritySuite.semanticDedup(spark, sfDir, tau = 0.92, nlist = nlist91).head()

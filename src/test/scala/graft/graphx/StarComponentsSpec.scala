@@ -22,8 +22,8 @@ class StarComponentsSpec extends SparkSuite {
   private def starLabels(pairs: Seq[(Long, Long)]): (Map[Long, Long], Int) = {
     import spark.implicits._
     val df = pairs.toDF("u", "v")
-    val (labels, rounds) = StarComponents.runWithRounds(spark, df)
-    (labels.as[(Long, Long)].collect().toMap, rounds) // bounded-collect: test-sized graphs
+    val (labels, stats) = StarComponents.runWithStats(spark, df)
+    (labels.as[(Long, Long)].collect().toMap, stats.rounds) // bounded-collect: test-sized graphs
   }
 
   test("random multi-component graph: labels match GraphX exactly") {
@@ -37,11 +37,7 @@ class StarComponentsSpec extends SparkSuite {
     }
     val (star, rounds) = starLabels(pairs)
     assert(star == gxLabels(pairs))
-    // +2 margin over the historical 8: collapsed barriers (r18) detect
-    // the fixpoint up to two rounds later than the single-round loop
-    // (detection rides the next single-routed round); the log-round
-    // claim is about growth with component size, which this still pins.
-    assert(rounds <= 10, s"random graph should converge in few rounds, took $rounds")
+    assert(rounds <= 8, s"random graph should converge in few rounds, took $rounds")
   }
 
   test("long chain (diameter = n-1): log-ish rounds, labels still exact") {
@@ -80,43 +76,22 @@ class StarComponentsSpec extends SparkSuite {
     // COUNT is the stable evidence; 6·rounds + 12 separates the shapes
     // with margin on both sides (AQE bookkeeping drift should not trip
     // it, a return of the join/probe passes will).
-    //
-    // r18 round collapse: the same fixture is ALSO run with collapsing
-    // disabled (collapseMaxEdges = 0 — the single-round shape, which is
-    // the at-scale shape) and the A/B is pinned on the two stable axes:
-    // labels bit-identical, and the collapsed run schedules FEWER jobs
-    // (the entire point — two rounds per materialization barrier halve
-    // the checkpoint actions and Observation sync points). Walls are
-    // deliberately not compared (single-box walls swing ~2.5-3×).
     import spark.implicits._
     val sc = spark.sparkContext
     val df = (0L until 512L).map(i => (i, i + 1)).toDF("u", "v")
-    def countJobs(group: String)(body: => (Map[Long, Long], Int)): (Map[Long, Long], Int, Int) = {
-      sc.setJobGroup(group, "spec", interruptOnCancel = false)
-      val (labels, rounds) = try body finally sc.clearJobGroup()
-      def jobs(): Int = sc.statusTracker.getJobIdsForGroup(group).length
-      var (prev, cur, spins) = (-1, jobs(), 0)
-      while (cur != prev && spins < 50) { Thread.sleep(100); prev = cur; cur = jobs(); spins += 1 }
-      assert(cur > 0, "job-group tracking returned nothing — the test harness is broken")
-      (labels, rounds, cur)
-    }
-    def materialize(t: (org.apache.spark.sql.DataFrame, Int)): (Map[Long, Long], Int) =
-      (t._1.as[(Long, Long)].collect().toMap, t._2) // bounded-collect: test-sized graph
-    val (labelsC, roundsC, jobsC) = countJobs("star-jobcount-collapsed") {
-      materialize(StarComponents.runWithRounds(spark, df))
-    }
-    val (labelsS, roundsS, jobsS) = countJobs("star-jobcount-single") {
-      val (l, st) = StarComponents.runWithStats(spark, df, collapseMaxEdges = 0L)
-      materialize((l, st.rounds))
-    }
-    assert(labelsC == labelsS, "collapsed and single-round labels must be bit-identical")
-    assert(roundsS >= 3, s"a 513-node path should need several rounds, got $roundsS")
-    assert(roundsC <= roundsS + 2,
-      s"collapse may delay fixpoint detection by ≤2 rounds (single $roundsS, collapsed $roundsC)")
-    assert(jobsS <= 6 * roundsS + 12,
-      s"star contraction scheduled $jobsS jobs for $roundsS rounds — the r16 round-shape regressed")
-    assert(jobsC < jobsS,
-      s"collapsed barriers must schedule fewer jobs ($jobsC) than single rounds ($jobsS)")
+    sc.setJobGroup("star-jobcount", "spec", interruptOnCancel = false)
+    val (labels, rounds) = try {
+      val (l, st) = StarComponents.runWithStats(spark, df)
+      (l.as[(Long, Long)].collect().toMap, st.rounds) // bounded-collect: test-sized graph
+    } finally sc.clearJobGroup()
+    def jobCount(): Int = sc.statusTracker.getJobIdsForGroup("star-jobcount").length
+    var (prev, jobs, spins) = (-1, jobCount(), 0)
+    while (jobs != prev && spins < 50) { Thread.sleep(100); prev = jobs; jobs = jobCount(); spins += 1 }
+    assert(jobs > 0, "job-group tracking returned nothing — the test harness is broken")
+    assert(labels == (0L to 512L).map(_ -> 0L).toMap)
+    assert(rounds >= 3, s"a 513-node path should need several rounds, got $rounds")
+    assert(jobs <= 6 * rounds + 12,
+      s"star contraction scheduled $jobs jobs for $rounds rounds — the r16 round-shape regressed")
   }
 
   test("super-hub guard: mega-hub group trips the combiner fallback, labels identical") {
@@ -208,7 +183,7 @@ class StarComponentsSpec extends SparkSuite {
     spark.listenerManager.register(listener)
     val rounds = try {
       val df = (0L until 512L).map(i => (i, i + 1)).toDF("u", "v")
-      val r = StarComponents.runWithRounds(spark, df)._2
+      val r = StarComponents.runWithStats(spark, df)._2.rounds
       // The listener bus is async — poll until the capture count is
       // stable (same idiom as the job-count test below).
       var (prev, cur, spins) = (-1, captured.size, 0)
@@ -226,11 +201,6 @@ class StarComponentsSpec extends SparkSuite {
       // materialized subtrees in other stage nodes) whose subtree hangs
       // off .plan, not .children.
       case s: QueryStageExec => shuffles(s.plan)
-      // r18 toy regime runs rounds WITHOUT AQE (see withToyConf) — the
-      // captured plan then carries raw exchanges, not query stages.
-      case _: ReusedExchangeExec => 0
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
-        1 + e.children.map(shuffles).sum
       case other => other.children.map(shuffles).sum
     }
     def windows(p: SparkPlan): Int = p match {
@@ -248,34 +218,26 @@ class StarComponentsSpec extends SparkSuite {
       .filter(qe => qe.analyzed.toString.contains("Window") &&
         qe.analyzed.toString.contains("CollectMetrics"))
     assert(roundPlans.nonEmpty, "listener captured no round materializations — harness broken")
-    // r18: a collapsed barrier materializes TWO rounds (4 windows) in
-    // one plan, so plans ≥ barriers, and the invariant becomes
-    // per-ROUND: 3 shuffles per 2 windows (large-star window,
-    // small-star window, round-final distinct — the barrier's
-    // mid-round subplan appears once, explode-symmetrized, so nothing
-    // recomputes or double-shuffles).
-    val totalWindows = roundPlans.map(qe => windows(qe.executedPlan)).sum
-    assert(totalWindows == 2 * rounds,
-      s"expected ${2 * rounds} window ops across round plans for $rounds rounds, saw $totalWindows")
+    assert(roundPlans.size == rounds,
+      s"expected one round plan per round ($rounds), saw ${roundPlans.size}")
     roundPlans.foreach { qe =>
+      assert(qe.executedPlan.isInstanceOf[AdaptiveSparkPlanExec],
+        s"round plan must be AQE-final:\n${qe.executedPlan}")
       val w = windows(qe.executedPlan)
-      assert(w == 2 || w == 4, s"round plan must hold 1 round (2 windows) or a collapsed " +
-        s"barrier (4), saw $w:\n${qe.executedPlan}")
+      assert(w == 2, s"round plan must hold one round (2 windows), saw $w:\n${qe.executedPlan}")
       val n = shuffles(qe.executedPlan)
-      assert(n == 3 * w / 2,
-        s"plan with $w windows shuffled $n× (want ${3 * w / 2}: one per star + the " +
-          s"round-final distinct, per round) — the round shape regressed:\n${qe.executedPlan}")
+      assert(n == 3,
+        s"round plan shuffled $n× (want 3: one per star + the round-final distinct) — " +
+          s"the round shape regressed:\n${qe.executedPlan}")
     }
   }
 
-  test("guard trips from inside a collapsed barrier: fallback engages, labels exact") {
-    // r18: collapsed barriers observe group sizes on all four window
-    // passes and the trip routes rounds from r+2 to the fallback. A
-    // path's groups GROW round over round (star contraction doubles
+  test("guard trips after round 0: fallback engages, labels exact") {
+    // A path's groups GROW round over round (star contraction doubles
     // hook distances), so with a threshold the input degrees don't
-    // reach, the trip must fire from a barrier (combinerFrom ≥ 2 —
-    // round 0 is always single and its path-groups are ~3), fallback
-    // rounds must actually run, and labels stay the closed form.
+    // reach, the trip must fire after round 0 (whose path-groups are
+    // ~3), fallback rounds must actually run, and labels stay the
+    // closed form.
     import spark.implicits._
     val n = 512L
     val df = (0L until n - 1).map(i => (i, i + 1)).toDF("u", "v")
@@ -284,10 +246,8 @@ class StarComponentsSpec extends SparkSuite {
       superHubDegree = 300L, onRound = (name, _) => roundNames += name)
     assert(labels.as[(Long, Long)].collect().toMap ==
       (0L until n).map(_ -> 0L).toMap) // bounded-collect: test-sized graph
-    assert(stats.combinerFromRound >= 2,
-      s"trip must fire from a barrier (round 0 is single, groups ~3): $stats / $roundNames")
-    assert(roundNames.exists(_.endsWith("_window2")),
-      s"collapse never engaged on a 511-edge path: $roundNames")
+    assert(stats.combinerFromRound >= 1,
+      s"trip must fire after round 0 (path groups ~3): $stats / $roundNames")
     assert(stats.rounds > stats.combinerFromRound && roundNames.exists(_.endsWith("_fallback")),
       s"fallback rounds must actually have run: $stats / $roundNames")
   }

@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * semi-joined the node-count-sized keep set instead and paid two extra
   * full-adjacency SMJ exchanges per round (AQE-final plans probed at a
   * 1M-node/44.6M-edge derived graph; local walls are host-variance-
-  * equivalent per the KcoreAb same-JVM A/B — the exchange count is the
-  * cluster-posture claim). A regression back to shuffled peel joins
-  * should fail here, not in the hour-long GraphScale run. */
+  * equivalent per the same-JVM A/B in GRAPH_SCALE_r14.json `kcore_ab` —
+  * the exchange count is the cluster-posture claim). A regression back
+  * to shuffled peel joins should fail here, not in the hour-long
+  * GraphScale run. */
 class GraphAnalyticsPlanSpec extends SparkSuite {
 
   test("k-core peel round: dead set broadcast-anti-joined, adjacency never join-shuffled") {
@@ -27,8 +28,8 @@ class GraphAnalyticsPlanSpec extends SparkSuite {
     // Execute through the Dataset's OWN QueryExecution (toRdd) so the
     // AdaptiveSparkPlan finalizes in place — a count() action plans a
     // SEPARATE execution and would leave this one's executedPlan at the
-    // never-run INITIAL plan (ADVICE r14; KcoreAb's planOnly path is the
-    // reference pattern). The inspected plan is now genuinely AQE-final.
+    // never-run INITIAL plan (ADVICE r14). The inspected plan is now
+    // genuinely AQE-final.
     val qe = next.queryExecution
     qe.toRdd.count()
     val p = qe.executedPlan.toString

@@ -3,6 +3,9 @@ package graft.snap
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
 /** Parser unit tests against the FIXTURES.md §1 per-ego line counts and
   * the reference's parse semantics (first-space split, last-`;` split,
   * trailing-newline guard at main.js:149,162). */
@@ -60,5 +63,38 @@ class SnapSourceSpec extends SparkSuite {
     assert(props.length == 1)
     val m = props.head.getAs[Map[String, String]]("properties")
     assert(m == Map("k" -> "v2")) // bit 1 unset, bits 0 and 2 set, 2 wins
+  }
+
+  /** One handwritten ego (id 5) in the five SNAP formats, written to a
+    * fresh temp dir, with `circleLine` as its only `.circles` line. */
+  private def writeTinyEgo(circleLine: String): String = {
+    val dir = Files.createTempDirectory("graft-snap").toString
+    def write(ext: String, lines: String*): Unit =
+      Files.write(Paths.get(s"$dir/5.$ext"), lines.asJava)
+    write("edges", "1 2", "2 1", "2 3", "3 2", "3 1")
+    write("featnames", "0 gender;anonymized feature 77", "1 locale;anonymized feature 127")
+    write("feat", "1 1 0", "2 0 1", "3 1 1")
+    write("egofeat", "0 1")
+    write("circles", circleLine, "circle1\t3")
+    dir
+  }
+
+  test("circles: a member listed twice in a circle loads as if listed once") {
+    // (name, is_ego, properties, circles) per vertex of the tiny ego.
+    def vertices(circleLine: String): Map[String, (Boolean, Map[String, String], Seq[String])] = {
+      val dir = writeTinyEgo(circleLine)
+      try {
+        val g = EgoGraphs.load(spark, dir)
+        try g.vertices.collect().map(r => r.getString(1) ->
+          (r.getBoolean(2), r.getMap[String, String](3).toMap, r.getSeq[String](4))).toMap
+        finally Seq(g.edges, g.friends, g.vertices).foreach(_.unpersist())
+      } finally graft.TmpFiles.deleteRecursively(dir)
+    }
+    val asSet = vertices("circle0\t1\t2")
+    assert(vertices("circle0\t1\t2\t1") == asSet)
+    assert(asSet.keySet == Set("5", "1", "2", "3"))
+    assert(asSet("1") == ((false,
+      Map("gender" -> "anonymized feature 77", "circle0" -> "yes"), Seq("circle0"))))
+    assert(asSet("3")._3 == Seq("circle1"))
   }
 }
