@@ -59,7 +59,7 @@ object Bench {
     def loadAvg(): Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     val loadStart = loadAvg()
-    val spark = Sessions.local("graft-bench", freezeTolerant = true)
+    val spark = Sessions.local("graft-bench")
 
     // Excluded from the timed set: streaming queries (they measure
     // micro-batch trigger latency over a temp-dir file replay, not engine

@@ -14,6 +14,8 @@ import org.apache.spark.sql.SparkSession
   *    partitions anyway.
   *  - `nanosAsLong` set once at build time (events.ts is TIMESTAMP(NANOS),
   *    which Spark cannot read natively — see [[Tables]]).
+  *  - one network timeout for every session, 900 s by default (see
+  *    [[networkTimeout]]).
   */
 object Sessions {
   /** Local core count: `SPARK_GRAFT_CPUS` when set (the deployment
@@ -21,16 +23,20 @@ object Sessions {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
     Runtime.getRuntime.availableProcessors.toString)
 
-  /** `spark.network.timeout` for freeze-tolerant entry points (see
-    * [[local]]'s `freezeTolerant`). Overridable per-invocation via the
-    * `SPARK_GRAFT_NETWORK_TIMEOUT` env var (e.g. a long `sbt test` run
-    * on this box can opt in without code changes). */
-  private def networkTimeout(freezeTolerant: Boolean): Option[String] =
-    sys.env.get("SPARK_GRAFT_NETWORK_TIMEOUT")
-      .orElse(if (freezeTolerant) Some("900s") else None)
+  /** `spark.network.timeout`: 900 s unless `SPARK_GRAFT_NETWORK_TIMEOUT`
+    * names another value. Spark's 120 s default kills the local executor
+    * whenever the host stalls for longer, and virtualized hosts have
+    * frozen for minutes (driver heartbeat gaps of 373 s and 607 s during
+    * at-scale runs). Heartbeats still flow every 10 s, so a real hang is
+    * still detected, 15 min later; in one local JVM that costs nothing,
+    * since a dead JVM fails the run regardless of this timeout. A
+    * deployment that wants faster lost-executor detection sets the
+    * variable. */
+  private def networkTimeout: String =
+    sys.env.getOrElse("SPARK_GRAFT_NETWORK_TIMEOUT", "900s")
 
-  def local(appName: String = "graft", freezeTolerant: Boolean = false): SparkSession = {
-    val builder = SparkSession.builder()
+  def local(appName: String = "graft"): SparkSession = {
+    val spark = SparkSession.builder()
       .appName(appName)
       .master(s"local[$cpus]")
       .withExtensions(new graft.functions.GraftExtensions)
@@ -45,21 +51,8 @@ object Sessions {
       // keys are bugs everywhere except the circle overlay, which spells
       // its overwrite semantics out explicitly (EgoGraphs.vertices).
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-    // freezeTolerant (scoped per r16 verdict — NOT a library default):
-    // this VM guest freezes wholesale for minutes at a time under the
-    // hypervisor (dmesg: hrtimer interrupt overruns; observed driver
-    // heartbeat gaps of 373 s and 607 s during at-scale runs). Spark's
-    // default 120 s network timeout then kills the local executor and
-    // the whole run. 900 s rides out those freezes; heartbeats still
-    // flow every 10 s (default), so a REAL hang is detected — just
-    // 15 min later, which on a single-JVM local box costs nothing (a
-    // dead JVM fails the run regardless of this timeout). Only the
-    // long-running mains of THIS repo (Verify/Bench/golden/at-scale
-    // tools) opt in; the bare factory keeps Spark's default so a
-    // library consumer on a real cluster keeps sane lost-executor
-    // detection.
-    networkTimeout(freezeTolerant).foreach(t => builder.config("spark.network.timeout", t))
-    val spark = builder.getOrCreate()
+      .config("spark.network.timeout", networkTimeout)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

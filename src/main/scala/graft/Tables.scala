@@ -38,8 +38,4 @@ object Tables {
       }
     } else df
   }
-
-  /** Register every table as a temp view (used by tests / SQL entry). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
 }

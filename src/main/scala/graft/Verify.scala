@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = Sessions.local("graft-verify", freezeTolerant = true)
+    val spark = Sessions.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_SKIP: comma-separated names excluded from the dump AND
     // from oracle_sql.json (so the DuckDB compare skips them too). Used by

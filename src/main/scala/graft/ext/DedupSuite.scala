@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
 
 /** Deduplication operators for a training-data pipeline, each at the
   * grain it scales at:
-  *  - exact dedup: hash-groupBy on a 60-bit fingerprint (q20/q43 cover
-  *    the primitive; [[exactDupGroups]] is the reusable form);
+  *  - exact dedup: hash-groupBy on a 60-bit fingerprint (q20/q43);
   *  - n-gram Jaccard: the exact refine step (quadratic — only ever run
   *    within a candidate bucket);
   *  - SimHash: linear map-reduce signature, near-dups collide in prefix
@@ -24,14 +23,6 @@ object DedupSuite {
   private def toks(s: SparkSession, d: String): DataFrame =
     Tables(s, d, "documents")
       .select(col("doc_id"), expr("filter(split(text, ' '), x -> x <> '')").as("toks"))
-
-  /** Exact-dup groups by 60-bit fingerprint: the linear, shuffle-once
-    * dedup every 100 TB pipeline starts with. */
-  def exactDupGroups(s: SparkSession, d: String): DataFrame =
-    Tables(s, d, "documents")
-      .groupBy(conv(expr("substring(md5(text), 1, 15)"), 16, 10).cast("bigint").as("fp64"))
-      .agg(count(lit(1)).as("n"), min("doc_id").as("keep_id"))
-      .filter(col("n") > 1)
 
   /** MinHash-LSH near-dup pairs over binary token-set vectors.
     * `distThreshold` is Jaccard DISTANCE (1 − J). Deterministic via seed. */
@@ -75,8 +66,8 @@ object DedupSuite {
     * each component keeps its lowest doc_id.
     *
     * The cluster step is REGIME-ROUTED through
-    * [[graft.graphx.GraphxAnalytics.componentLabels]] (the r15 verdict's
-    * parked decision, made in r16): below GraphxCcMaxPairs the pair graph
+    * [[graft.graphx.GraphxAnalytics.componentLabelsWithStats]] (the r15
+    * verdict's parked decision, made in r16): below GraphxCcMaxPairs the pair graph
     * is KB-sized and GraphX label propagation costs milliseconds per
     * round — even a worst-case dedup chain (A≈B≈…≈Z where only adjacent
     * docs overlap enough to pair) is bounded there by the router's
@@ -98,12 +89,13 @@ object DedupSuite {
       docs: DataFrame = null): DataFrame = {
     import s.implicits._
     val base = Option(docs).getOrElse(toks(s, d))
-    // componentLabels caches this RDD for its route count + CC passes
-    // (one LSH-join execution total) and releases it before returning.
+    // componentLabelsWithStats caches this RDD for its route count + CC
+    // passes (one LSH-join execution total) and releases it before
+    // returning.
     val pairs = minhashPairs(s, d, distThreshold, base)
       .select(col("a_id").as("u"), col("b_id").as("v"))
       .as[(Long, Long)].rdd
-    val (labels, _) = GraphxAnalytics.componentLabels(s, pairs)
+    val (labels, _, _) = GraphxAnalytics.componentLabelsWithStats(s, pairs)
     // The returned DataFrame is cached and eagerly materialized so the
     // iterative lineage never re-executes. This idiom is right HERE
     // because the output is cluster-count-sized — do NOT copy it into an

@@ -53,9 +53,7 @@ object SimilaritySuite {
 
   // ---- fit-once / serve-many memos (r9 verdict item 6) -----------------
   // The production 100 TB split is an offline fit job + many serving
-  // queries (PqModelStore is the cross-JVM equivalent of these per-JVM
-  // memos; PqModelStoreSpec pins encode parity across the round trip).
-  // The q53/q134/q135 entries serve from a model fitted once per
+  // queries. The q53/q134/q135 entries serve from a model fitted once per
   // (dataset, params) — every fit here is deterministic (fixed seeds,
   // md5-ordered init, decimal accumulation), so a memoized model yields
   // bit-identical results to a refit. Bench times the fits separately
@@ -260,8 +258,8 @@ object SimilaritySuite {
   /** The q135 IVF-PQ index parameters: `centers` is the coarse quantizer
     * (nlist cells over the RAW vectors), `pq` the product quantizer fit on
     * the RESIDUALS (vec − center[cell]). Together they are everything a
-    * serving job needs — fit once offline, persist via [[PqModelStore]],
-    * serve many (the production 100 TB shape). */
+    * serving job needs — fit once, serve many (the production 100 TB
+    * shape). */
   final case class IvfPqModel(centers: Array[Array[Double]],
       pq: PqModel)
 
@@ -401,8 +399,8 @@ object SimilaritySuite {
       vecsIn: DataFrame = null, modelIn: PqModel = null): DataFrame = {
     val base = (if (vecsIn != null) vecsIn else Tables(s, d, "embeddings"))
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("arr"))
-    // Serve from a pre-fitted (possibly PqModelStore-loaded) model when
-    // provided — the fit-once-offline path; refit only when absent.
+    // Serve from a pre-fitted model when provided — the fit-once path;
+    // refit only when absent.
     val model = if (modelIn != null) modelIn else fitPq(s, d, m, ksub, vecsIn = vecsIn)
     val probe = base.filter(col("vec_id") === probeId)
       .head().getSeq[Double](1).toArray
@@ -500,8 +498,8 @@ object SimilaritySuite {
       modelIn: IvfPqModel = null): DataFrame = {
     val base = (if (vecsIn != null) vecsIn else Tables(s, d, "embeddings"))
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("arr"))
-    // Serve from a pre-fitted (possibly PqModelStore-loaded) model when
-    // provided; refit only when absent. Serving itself is ONE linear
+    // Serve from a pre-fitted model when provided; refit only when
+    // absent. Serving itself is ONE linear
     // chain over the corpus — assign cell, residual-encode — with no
     // re-attach join (the r8 shape joined codes back to cells; keeping
     // `cell` in the chain drops that shuffle entirely).
@@ -644,7 +642,7 @@ object SimilaritySuite {
       (s, d) => ivfPqTopK(s, d, probeId = 0L, k = 10, nlist = 8, nprobe = 4,
         modelIn = cachedIvfPq(s, d, 8)),
       None,
-      gate = Some("property:SimilaritySpec/IVF-PQ recall@10; PqModelStoreSpec reload parity")),
+      gate = Some("property:SimilaritySpec/IVF-PQ recall@10")),
 
     // Hard-negative mining — the contrastive-training pair generator:
     // for each anchor, the highest-cosine SAME-label vector (positive)

@@ -83,7 +83,7 @@ object GoldenMain {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.filterNot(_.startsWith("--")).getOrElse("/tmp/golden_out")
     val withCentrality = args.contains("--centrality")
-    val spark: SparkSession = graft.Sessions.local("graft-golden", freezeTolerant = true)
+    val spark: SparkSession = graft.Sessions.local("graft-golden")
     Files.createDirectories(Paths.get(outDir))
     val graphs = EgoGraphs.load(spark, "/root/reference/data")
     Golden.render(graphs, withCentrality).foreach { case (ego, out) =>

@@ -109,7 +109,7 @@ object GraphxAnalytics {
       .orderBy("ego", "name")
   }
 
-  /** Above this many undirected pairs [[componentLabels]] routes CC
+  /** Above this many undirected pairs [[componentLabelsWithStats]] routes CC
     * through star contraction instead of GraphX label propagation (the
     * [[LazyChainMaxNodes]] regime-split pattern applied to CC). Below it
     * GraphX's per-round constant is small and social-shaped fixtures
@@ -125,7 +125,7 @@ object GraphxAnalytics {
     * too, not diameter-bound (r15 verdict item 2). */
   private[graft] val GraphxCcMaxPairs = 1000000L
 
-  /** Round cap for the GraphX branch of [[componentLabels]]: label
+  /** Round cap for the GraphX branch of [[componentLabelsWithStats]]: label
     * propagation pays one synchronized Pregel round per hop of component
     * eccentricity, so an uncapped run on a small-but-deep graph (a
     * 100k-node path is well under [[GraphxCcMaxPairs]]) would schedule
@@ -138,8 +138,15 @@ object GraphxAnalytics {
   /** (id, label = component-min vertex id) for an undirected pair RDD,
     * regime-routed per [[GraphxCcMaxPairs]]; returns the labels (cached
     * and materialized — ContextCleaner reclaims them when the frame is
-    * GC'd, the pagerankFixed contract) and the branch taken ("graphx" |
-    * "star"). Both branches produce IDENTICAL labels (component-min ids;
+    * GC'd, the pagerankFixed contract), the branch taken ("graphx" |
+    * "star") and the [[StarComponents.StarStats]] of any star-contraction
+    * leg taken (None on the pure "graphx" branch). `onRound` is the
+    * per-star-round wall callback passed through to
+    * [[StarComponents.runWithStats]] — the at-scale tools record star
+    * rounds / peak group / guard-trip index in their artifacts through
+    * it (r17 verdict item 7: the 1e7 super-hub threshold accumulates
+    * observed headroom data for free on every star-routed run). Both
+    * branches produce IDENTICAL labels (component-min ids;
     * StarComponentsSpec and GRAPH_SCALE_r14's 1M-node `starcc_check`
     * pin it), so the route is behavior-invisible — only the
     * round/shuffle shape changes. One
@@ -169,19 +176,6 @@ object GraphxAnalytics {
     * caller's cache). Note one side effect of the routing count: a
     * caller-persisted-but-not-yet-materialized input pays its full
     * lineage here, and that materialization lands in the CALLER's cache. */
-  def componentLabels(s: SparkSession, pairs: RDD[(VertexId, VertexId)])
-      : (DataFrame, String) = {
-    val (labels, branch, _) = componentLabelsWithStats(s, pairs)
-    (labels, branch)
-  }
-
-  /** [[componentLabels]] plus the [[StarComponents.StarStats]] of any
-    * star-contraction leg taken (None on the pure "graphx" branch) and
-    * a per-star-round wall callback passed through to
-    * [[StarComponents.runWithStats]] — the at-scale tools record star
-    * rounds / peak group / guard-trip index in their artifacts through
-    * this (r17 verdict item 7: the 1e7 super-hub threshold accumulates
-    * observed headroom data for free on every star-routed run). */
   def componentLabelsWithStats(s: SparkSession, pairs: RDD[(VertexId, VertexId)],
       onRound: (String, Double) => Unit = (_, _) => ())
       : (DataFrame, String, Option[StarComponents.StarStats]) = {
@@ -239,12 +233,12 @@ object GraphxAnalytics {
       .orderBy("ego")
 
   /** (ego, n_components, largest) of the friend-only graph — the
-    * PRODUCTION CC entry, regime-routed via [[componentLabels]]: the
+    * PRODUCTION CC entry, regime-routed via [[componentLabelsWithStats]]: the
     * ego fixtures take the GraphX branch, a ≥1M-pair graph takes star
     * contraction (GraphScale's g08 phase asserts it did). */
   def componentStats(s: SparkSession, dataDir: String, egos: Seq[String]): DataFrame = {
     val pairs = compositeEdges(s, dataDir, egos, withEgoCenter = false)
-    val (labels, _) = componentLabels(s, pairs)
+    val (labels, _, _) = componentLabelsWithStats(s, pairs)
     componentStatsOf(labels, egos)
   }
 
@@ -264,27 +258,7 @@ object GraphxAnalytics {
   def componentStatsStar(s: SparkSession, dataDir: String, egos: Seq[String]): DataFrame = {
     import s.implicits._
     val pairs = compositeEdges(s, dataDir, egos, withEgoCenter = false).toDF("u", "v")
-    componentStatsOf(StarComponents.run(s, pairs), egos)
-  }
-
-  /** (name, rank) — personalized PageRank on one ego's friend-only graph
-    * from its minimum node id: random walks teleport back to the SOURCE
-    * instead of everywhere, so rank measures proximity to it — the
-    * "related accounts" / local-relevance primitive. Deterministic source
-    * choice (min vertex id), fixed iterations; no SQL oracle (iterative
-    * personalized mass distribution) — invariants are pinned in
-    * GraphxAnalyticsSpec: the source dominates, ranks are non-negative,
-    * and mass stays strictly inside the source's connected component. */
-  def personalizedRanks(s: SparkSession, dataDir: String, ego: String,
-      iters: Int = 10): DataFrame = {
-    import s.implicits._
-    val g = friendGraph(s, dataDir, Seq(ego), withEgoCenter = false)
-    val src = g.vertices.map(_._1).min()
-    val pr = g.staticPersonalizedPageRank(src, iters).vertices
-      .map { case (vid, r) => ((vid % Offset).toString, r) }
-    pr.toDF("name", "rank")
-      .select(col("name"), round(col("rank"), 6).as("rank"))
-      .orderBy("name")
+    componentStatsOf(StarComponents.runWithStats(s, pairs)._1, egos)
   }
 
   /** Fixed-point scale for [[pagerankFixed]] / [[personalizedRankFixed]]:

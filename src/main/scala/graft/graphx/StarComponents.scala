@@ -54,7 +54,7 @@ object StarComponents {
 
   /** Drop the cached blocks behind a localCheckpointed frame (the
     * materialize-then-release Pregel/kcore discipline, ADVICE r14: the
-    * loop previously accumulated up to maxRounds edge-list snapshots in
+    * loop previously accumulated up to MaxRounds edge-list snapshots in
     * block storage). Only safe once nothing will read the frame again —
     * a localCheckpoint has no lineage to recompute from. */
   private def releaseCheckpoint(df: DataFrame): Unit =
@@ -100,14 +100,15 @@ object StarComponents {
     * which no reactive guard can avoid without a pre-pass. */
   val SuperHubMargin = 10L
 
+  /** Round cap. Rounds grow ~log(component size) (5 at 1M nodes,
+    * GRAPH_SCALE_r14), so the cap only stops a loop that cannot converge. */
+  private val MaxRounds = 64
+
   /** (id, label) for every vertex of `pairs` — one row per distinct
     * endpoint; label = component-min vertex id (bit-identical to GraphX
-    * connectedComponents on the same pairs). `pairs` columns: (u, v),
-    * one row per undirected pair (self-loops ignored). */
-  def run(spark: SparkSession, pairs: DataFrame, maxRounds: Int = 64): DataFrame =
-    runWithStats(spark, pairs, maxRounds)._1
-
-  /** [[run]] plus [[StarStats]] — `superHubDegree` is the guard DANGER
+    * connectedComponents on the same pairs) — plus the run's
+    * [[StarStats]]. `pairs` columns: (u, v), one row per undirected pair
+    * (self-loops ignored). `superHubDegree` is the guard DANGER
     * size (the trip fires a [[SuperHubMargin]] below it; tests pass a
     * small value to force the fallback; production callers keep
     * [[DefaultSuperHubDegree]]). Labels are bit-identical on both round
@@ -116,7 +117,7 @@ object StarComponents {
     * `onRound` is invoked after each round with (`"r<i>_window"` |
     * `"r<i>_fallback"`, wall seconds) — the at-scale tools record
     * per-round walls through it. */
-  def runWithStats(spark: SparkSession, pairs: DataFrame, maxRounds: Int = 64,
+  def runWithStats(spark: SparkSession, pairs: DataFrame,
       superHubDegree: Long = DefaultSuperHubDegree,
       onRound: (String, Double) => Unit = (_, _) => ()): (DataFrame, StarStats) = {
     // The probe RIDES the eager checkpoint's materializing job as
@@ -145,7 +146,7 @@ object StarComponents {
     // All vertices, captured BEFORE contraction (interior nodes vanish
     // from the edge list as they hook onto roots). EAGER: the input
     // frame is fully read here, preserving the entry-time-materialization
-    // contract callers rely on when they release their input after run().
+    // contract callers rely on when they release their input after the call.
     val vertices = pairs.select(col("u").as("id"))
       .unionAll(pairs.select(col("v").as("id"))).distinct().localCheckpoint()
 
@@ -176,7 +177,7 @@ object StarComponents {
     var r = 0
     var maxGroup = 0L
     var combinerFrom = -1
-    while (!converged && r < maxRounds) {
+    while (!converged && r < MaxRounds) {
       val roundT0 = System.nanoTime()
       val fallback = combinerFrom >= 0
       val sym = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
@@ -275,7 +276,7 @@ object StarComponents {
       e = next
       r += 1
     }
-    require(converged, s"star contraction did not converge in $maxRounds rounds")
+    require(converged, s"star contraction did not converge in $MaxRounds rounds")
     // Children point at their root; roots (and isolated vertices — any
     // vertex never appearing as a child) label themselves.
     val labels = vertices.join(e.withColumnRenamed("u", "id"), Seq("id"), "left")

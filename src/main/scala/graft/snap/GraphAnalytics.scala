@@ -187,7 +187,7 @@ object GraphAnalytics {
     *    hypothesis set on both endpoints.
     * Verified: 153/64 (ego 0), 8378/2920 (ego 107). */
   def proofCounts(g: EgoGraphs): DataFrame = {
-    val s = hypothesisSet(g.vertices).cache()
+    val s = hypothesisSet(g.vertices)
 
     val denom = s.groupBy("ego", "hometown", "school")
       .agg(count(lit(1)).as("c"))

@@ -128,7 +128,7 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val chunks = 16
-    val spark = Sessions.local("graft-stream-bench", freezeTolerant = true)
+    val spark = Sessions.local("graft-stream-bench")
     import spark.implicits._
 
     var failed = 0

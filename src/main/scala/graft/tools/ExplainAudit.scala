@@ -6,7 +6,7 @@ import graft.{Sessions, SparkEntry}
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = Sessions.local("graft-audit", freezeTolerant = true)
+    val spark = Sessions.local("graft-audit")
     val names = if (args.nonEmpty) args.toSeq else Seq("q04_join_large", "q10_agg_battery")
     // EXPLAIN_EXEC=1: noop-run the query first and print the AQE FINAL
     // plan (ReusedExchange / stage reuse only shows up post-execution).

@@ -106,7 +106,7 @@ object GraphScale {
     val targetBatches = if (args.length > 4) args(4).toInt else 4
     require(topology == "tree" || topology == "chain",
       s"topology must be tree|chain, got $topology")
-    val spark = Sessions.local("graft-graph-scale", freezeTolerant = true)
+    val spark = Sessions.local("graft-graph-scale")
     val sc = spark.sparkContext
     import spark.implicits._
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
@@ -138,7 +138,7 @@ object GraphScale {
     phase("g08_cc")
 
     // ---- g08 at scale: connected components ------------------------------
-    // The PRODUCTION regime-routed entry (GraphxAnalytics.componentLabels):
+    // The PRODUCTION regime-routed entry (GraphxAnalytics.componentLabelsWithStats):
     // at this volume it must take the star-contraction branch — asserted
     // below, the r14 verdict's routing evidence. One tuple per undirected
     // pair (a cheap narrow filter over the cached symmetric closure)
@@ -177,7 +177,7 @@ object GraphScale {
     require(nComp == 1L && largest == nNodes,
       s"derived graph must be one component of $nNodes (got $nComp components, largest $largest)")
     ccLabels.write.mode("overwrite").parquet(s"$outDir/cc.parquet")
-    // We cached ccPairs, so per the componentLabels input contract
+    // We cached ccPairs, so per the componentLabelsWithStats input contract
     // (caller-persisted inputs are left untouched) both drops are ours.
     ccPairs.unpersist(blocking = false)
     ccLabels.unpersist(blocking = false)

@@ -28,7 +28,7 @@ object QueryAb {
     val rounds = rest.headOption.fold(4)(_.toInt)
     val arms = names.map(queries)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.local("graft-query-ab", freezeTolerant = true)
+    val spark = Sessions.local("graft-query-ab")
 
     // A/B result identity first (outside any timed window): sorted row strings.
     if (arms.size == 2) {

@@ -240,7 +240,7 @@ object RecallGate {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outPath) = args
-    val spark = Sessions.local("graft-recall-gate", freezeTolerant = true)
+    val spark = Sessions.local("graft-recall-gate")
     val (results, failures, probes) = run(spark, sfDir)
     val nVecs = results("n_vecs").toLong
 

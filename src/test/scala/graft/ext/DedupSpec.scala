@@ -115,7 +115,7 @@ class DedupSpec extends SparkSuite {
     // docs two apart share 8/16 (J = 0.5, outside) — so the pair graph is
     // EXACTLY a path of 19 hops. This is the long-dedup-family shape the
     // cluster step's router must stay bounded on: at this KB volume
-    // componentLabels takes the GraphX branch, whose 25-round cap plus
+    // componentLabelsWithStats takes the GraphX branch, whose 25-round cap plus
     // star-contraction finish bounds ANY chain depth (a 19-hop path
     // converges under the cap; deeper families would finish on the
     // contracted label graph) — GraphxAnalyticsSpec pins both regimes.

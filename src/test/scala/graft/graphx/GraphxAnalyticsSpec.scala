@@ -1,7 +1,8 @@
 package graft.graphx
 
 import graft.SparkSuite
-import graft.snap.GraphSuite
+import graft.snap.{GraphSuite, TinyEgo}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class GraphxAnalyticsSpec extends SparkSuite {
@@ -22,31 +23,46 @@ class GraphxAnalyticsSpec extends SparkSuite {
     }
   }
 
-  test("personalized pagerank: source dominates, mass stays in its component") {
-    val ranks = GraphxAnalytics.personalizedRanks(spark, GraphSuite.dataDir, "698")
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(ranks.values.forall(_ >= 0.0))
-    // Deterministic source = min node id of the friend graph.
+  /** g12's invariants: ranks ≥ 0, the source (min node id) holds the
+    * maximum, and no mass on nodes the canonical `edges` do not connect
+    * to the source. */
+  private def assertPprInvariants(ranks: Map[String, Long], edges: DataFrame): Unit = {
+    assert(ranks.values.forall(_ >= 0L))
     val src = ranks.keys.map(_.toLong).min.toString
-    assert(ranks(src) == ranks.values.max,
-      s"source $src rank ${ranks(src)} is not the max")
-    // Zero mass strictly outside the source's connected component: every
-    // node with positive rank must be reachable from the source. Build
-    // reachability from the same canonical edge set.
-    val edges = graft.snap.EgoGraphs.load(spark, GraphSuite.dataDir).edges
-      .filter(col("ego") === "698")
-      .select("src", "dst").collect()
+    assert(ranks(src) == ranks.values.max, s"source $src is not the max")
+    val adj = edges.select("src", "dst").collect() // bounded-collect: one test ego
       .map(r => (r.getString(0), r.getString(1)))
-    val adj = edges.flatMap(e => Seq(e, e.swap)).groupBy(_._1)
+      .flatMap(e => Seq(e, e.swap)).groupBy(_._1)
       .map { case (k, v) => k -> v.map(_._2).toSet }
-    val seen = scala.collection.mutable.Set(src)
+    var seen = Set(src)
     var frontier = Set(src)
     while (frontier.nonEmpty) {
-      frontier = frontier.flatMap(n => adj.getOrElse(n, Set.empty)).diff(seen)
+      frontier = frontier.flatMap(n => adj.getOrElse(n, Set.empty[String])).diff(seen)
       seen ++= frontier
     }
-    val offComponent = ranks.filter { case (n, r) => r > 0.0 && !seen.contains(n) }
-    assert(offComponent.isEmpty, s"mass leaked outside the component: $offComponent")
+    val leaked = ranks.filter { case (n, r) => r > 0L && !seen.contains(n) }
+    assert(leaked.isEmpty, s"mass leaked outside the component: $leaked")
+  }
+
+  private def pprRanks(dataDir: String, ego: String): Map[String, Long] =
+    GraphxAnalytics.personalizedRankFixed(spark, dataDir, ego)
+      .collect().map(r => r.getString(0) -> r.getAs[Long]("rank_fp")).toMap
+
+  test("fixed-point PPR on a generated two-component ego: source dominates, no mass off its component") {
+    // Component {1,2,3,4} holds the source 1; {7,8,9} must stay at 0.
+    val dir = TinyEgo.write(
+      edges = Seq("1 2", "2 3", "3 1", "3 4", "7 8", "8 9"),
+      featnames = Seq("0 gender;anonymized feature 77"),
+      feat = Seq("1 1", "2 0", "3 1", "4 0", "7 1", "8 0", "9 1"),
+      egofeat = "1",
+      circles = Seq("circle0\t1\t7"))
+    TinyEgo.using(spark, dir) { g =>
+      val ranks = pprRanks(dir, "5")
+      assert(ranks.keySet == Set("1", "2", "3", "4", "7", "8", "9"))
+      assert(Seq("7", "8", "9").forall(ranks(_) == 0L))
+      assert(ranks("1") > 0L)
+      assertPprInvariants(ranks, g.edges)
+    }
   }
 
   test("fixed-point pagerank (g09's oracled path) tracks the double library implementation") {
@@ -71,26 +87,8 @@ class GraphxAnalyticsSpec extends SparkSuite {
   }
 
   test("fixed-point PPR (g12's oracled path): source dominates, mass confined to its component") {
-    val ranks = GraphxAnalytics.personalizedRankFixed(spark, GraphSuite.dataDir, "698")
-      .collect().map(r => r.getString(0) -> r.getAs[Long]("rank_fp")).toMap
-    assert(ranks.values.forall(_ >= 0L))
-    val src = ranks.keys.map(_.toLong).min.toString
-    assert(ranks(src) == ranks.values.max, s"source $src is not the max")
-    // Positive mass only on nodes reachable from the source.
-    val edges = graft.snap.EgoGraphs.load(spark, GraphSuite.dataDir).edges
-      .filter(col("ego") === "698")
-      .select("src", "dst").collect()
-      .map(r => (r.getString(0), r.getString(1)))
-    val adj = edges.flatMap(e => Seq(e, e.swap)).groupBy(_._1)
-      .map { case (k, v) => k -> v.map(_._2).toSet }
-    val seen = scala.collection.mutable.Set(src)
-    var frontier = Set(src)
-    while (frontier.nonEmpty) {
-      frontier = frontier.flatMap(n => adj.getOrElse(n, Set.empty)).diff(seen)
-      seen ++= frontier
-    }
-    val leaked = ranks.filter { case (n, r) => r > 0L && !seen.contains(n) }
-    assert(leaked.isEmpty, s"mass leaked outside the component: $leaked")
+    assertPprInvariants(pprRanks(GraphSuite.dataDir, "698"),
+      graft.snap.EgoGraphs.load(spark, GraphSuite.dataDir).edges.filter(col("ego") === "698"))
   }
 
   test("connected components: ego 348 friend graph is connected, 3980 is not") {
@@ -110,7 +108,7 @@ class GraphxAnalyticsSpec extends SparkSuite {
     // component-min ids.
     val pairs = GraphxAnalytics.compositeEdges(spark, GraphSuite.dataDir,
       Seq("348", "3980"), withEgoCenter = false)
-    val (labels, branch) = GraphxAnalytics.componentLabels(spark, pairs)
+    val (labels, branch, _) = GraphxAnalytics.componentLabelsWithStats(spark, pairs)
     assert(branch == "graphx", s"ego fixture took branch $branch")
     val rows = labels.collect() // bounded-collect: test-sized graphs
     assert(rows.nonEmpty)
@@ -132,7 +130,7 @@ class GraphxAnalyticsSpec extends SparkSuite {
     val sc = spark.sparkContext
     val n = 10000L
     val pairs = sc.parallelize(0L until n - 1, 2).map(i => (i, i + 1))
-    val (labels, branch) = GraphxAnalytics.componentLabels(spark, pairs)
+    val (labels, branch, _) = GraphxAnalytics.componentLabelsWithStats(spark, pairs)
     assert(branch == "graphx+star", s"deep path took branch $branch")
     val rows = labels.collect() // bounded-collect: test-sized graphs
     assert(rows.length == n)
@@ -150,7 +148,7 @@ class GraphxAnalyticsSpec extends SparkSuite {
     val path = (100000L until 101000L - 1).map(i => (i, i + 1))
     val rest = Seq((5L, 6L), (6L, 7L), (7L, 5L), (20L, 21L))
     val pairs = sc.parallelize(path ++ rest, 2)
-    val (labels, branch) = GraphxAnalytics.componentLabels(spark, pairs)
+    val (labels, branch, _) = GraphxAnalytics.componentLabelsWithStats(spark, pairs)
     assert(branch == "graphx+star", s"took branch $branch")
     val m = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap // bounded-collect: test-sized graphs
     assert((100000L until 101000L).forall(m(_) == 100000L))

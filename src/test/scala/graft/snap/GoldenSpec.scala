@@ -13,6 +13,7 @@ import scala.jdk.CollectionConverters._
   * Clustering lines are compared as a MULTISET of byte-exact lines: the
   * reference appended them in async HTTP completion order (one Cypher
   * query per friend, `main.js:90-104`), which is not reproducible.
+  * The last test needs no reference data: it renders a handwritten ego.
   */
 class GoldenSpec extends SparkSuite {
 
@@ -54,5 +55,25 @@ class GoldenSpec extends SparkSuite {
   test("ego 3980 (empty hypothesis set) renders NaN percentage like JS") {
     assert(outputs("3980").proofs.contains("Percentage of the latter: NaN"))
     assert(outputs("3980").proofs.contains("disproved"))
+  }
+
+  test("render leaves no cached hypothesis-set plan behind") {
+    // Nodes 1 and 2 (and the ego) share hometown and school, so the
+    // hypothesis set is non-empty and proofCounts joins it twice.
+    val dir = TinyEgo.write(
+      edges = Seq("1 2", "2 3", "3 1"),
+      featnames = Seq("0 hometown;id;anonymized feature 1",
+        "1 hometown;id;anonymized feature 2", "2 education;school;id;anonymized feature 3"),
+      feat = Seq("1 1 0 1", "2 1 0 1", "3 0 1 1"),
+      egofeat = "1 0 1",
+      circles = Seq("circle0\t1\t2"))
+    TinyEgo.using(spark, dir) { g =>
+      assert(Golden.render(g).keySet == Set("5"))
+      val cached = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sharedState.cacheManager
+        .lookupCachedData(GraphAnalytics.hypothesisSet(g.vertices)
+          .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      assert(cached.isEmpty, "render left the hypothesis set cached")
+    }
   }
 }
