@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
+import scala.collection.immutable.ListMap
+
 /** Benchmark main — BASELINE.md protocol: 1 warm-up pass, then
   * median-of-5 wall-clock per query, deterministic (sorted) query order.
   *
@@ -17,18 +19,19 @@ import org.apache.spark.sql.DataFrame
   *     (median >> min on unchanged plans = external load, not a plan change);
   *   - a fixed calibration sentinel (the cheapest stable query) is re-timed
   *     every ~20 queries through the timed phase (not just 3 points);
-  *     `sentinel.spread` (trimmed: 2nd-highest/2nd-lowest sample) > ~1.5
-  *     flags shifting machine conditions;
+  *     `sentinel.spread` (trimmed: 2nd-highest/2nd-lowest sample) flags
+  *     shifting machine conditions — rule [[spreadTrip]];
   *   - `inflation_index` = median over substantial queries (min ≥ 0.15 s)
   *     of their median/min run ratio. On a quiet host this sits near 1.0–1.1
   *     regardless of plans; a round inflated by ambient load shows > ~1.4
-  *     even when the sentinel got lucky.
+  *     even when the sentinel got lucky — rule [[inflationTrip]];
   *   - `shared27_retime` (r11): the headline queries run once more at the
   *     very END; `ratio_vs_median` = retime sum / sum of timed medians.
   *     Early-run load that lifts mid-run leaves the medians inflated but
-  *     the retime fast — ratio < 0.7 (with a ≥ 2 s headline sum) trips on
-  *     its own, the shape the r10 driver artifact missed.
-  *     `contaminated` = any trip.
+  *     the retime fast, the shape the r10 artifact missed — rule
+  *     [[earlyLoadTrip]].
+  *     `contaminated` = any of the three rules trips; each rule is one
+  *     function next to its thresholds.
   *
   * Artifact plumbing (round-6 lesson: the driver records only the LAST
   * ~2000 chars of stdout; the full 15 KB JSON line never parsed in ANY
@@ -46,6 +49,44 @@ object Bench {
   /** The 27 round-1 queries whose 35.36 s total is BASELINE.md's bench
     * anchor (extracted from BENCH_r01.json); the judge's "shared-27". */
   val shared27: Set[String] = (1 to 27).map(i => f"q$i%02d_").toSet
+
+  /** One query's timed runs reduced once: the median of its successful
+    * runs (-1 with fewer than 3 — sorting -1 failures to the front would
+    * pick an optimistic percentile of the survivors) and their min (-1
+    * with none). */
+  private[graft] final case class RunStats(median: Double, min: Double)
+
+  private[graft] def runStats(runs: Seq[Double]): RunStats = {
+    val ok = runs.filter(_ >= 0).sorted
+    RunStats(if (ok.size >= 3) ok(ok.size / 2) else -1.0, ok.headOption.getOrElse(-1.0))
+  }
+
+  /** Inflation trip: the inflation index (median over substantial queries
+    * of median/min) above 1.4 — the r6 failure mode the 3-point sentinel
+    * missed — stands on its own. */
+  private[graft] def inflationTrip(inflation: Double): Boolean = inflation > 1.4
+
+  /** Corroborated sentinel-spread trip. The threshold scales with the
+    * sentinel's magnitude (r9): the relative spread of a sub-second timing
+    * is dominated by its own GC/page-cache jitter — at sf1 a quiet host
+    * measured 0.23–0.84 s — so below a 1 s median the gate is 3.0, else
+    * 1.5. A spread trip counts only with mild corroboration from the
+    * plan-insensitive inflation index (> 1.15; the r7 sf1 false trip had
+    * inflation 1.08), or when no query yields an inflation ratio at all
+    * (a tiny-SF smoke run), where the spread must stand on its own rather
+    * than be silently discarded. */
+  private[graft] def spreadTrip(spread: Double, sentinelMedian: Double,
+      inflation: Double, hasRatios: Boolean): Boolean = {
+    val gate = if (sentinelMedian > 0 && sentinelMedian < 1.0) 3.0 else 1.5
+    spread > gate && (!hasRatios || inflation > 1.15)
+  }
+
+  /** Early-load trip: the end-of-run shared-27 pass sums well below the
+    * timed medians (ratio in (0, 0.7)), so the timed phase was inflated by
+    * load that has since lifted. Armed only when the headline sum is
+    * substantial (≥ 2 s) — a sub-second 27-sum is scheduler noise. */
+  private[graft] def earlyLoadTrip(shared27MedianSum: Double, retimeRatio: Double): Boolean =
+    shared27MedianSum >= 2.0 && retimeRatio > 0 && retimeRatio < 0.7
 
   private def exec(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
@@ -130,6 +171,8 @@ object Bench {
     val retimes = names.filter(isShared).map(n => n -> timeOne(n, timed = false))
     val retimeSum = retimes.collect { case (_, t) if t >= 0 => t }.sum
 
+    val stats = raw.map { case (n, runs) => n -> runStats(runs) }
+
     // Suspect re-time (r13 verdict item 5): last round THREE artifacts were
     // needed to refute two phantom per-query regressions — elevated medians
     // that were host noise, visible only by cross-running the same HEAD.
@@ -141,11 +184,9 @@ object Bench {
     // rode ambient load (ignore the median delta); a retime near the
     // MEDIAN says the cost is real. One artifact now adjudicates its own
     // outliers. The set is empty on a quiet host and usually < 10 rows.
-    val suspectRetimes = raw.flatMap { case (n, runs) =>
-      val ok = runs.filter(_ >= 0).sorted
-      if (ok.size >= 3 && ok.head >= 0.3 && ok(ok.size / 2) / ok.head > 1.4)
-        Some((n, ok(ok.size / 2), ok.head, timeOne(n, timed = false)))
-      else None
+    val suspectRetimes = stats.collect {
+      case (n, st) if st.min >= 0.3 && st.median / st.min > 1.4 =>
+        (n, st, timeOne(n, timed = false))
     }
 
     // Fit-vs-serve split (r9 verdict item 6): the q53/q134/q135 ANN
@@ -177,112 +218,64 @@ object Bench {
     // engine plans — and they ignore sfDir entirely), but the perf ledger
     // should still cover them; one wall-clock run each, like ann_fit_sec.
     val sideTimes: Seq[(String, Double)] = excluded.toSeq.sorted
-      .filter(SparkEntry.queries.contains).map { n =>
-        val t = timeOne(n, timed = false)
-        n -> t
-      }
+      .filter(SparkEntry.queries.contains).map(n => n -> timeOne(n, timed = false))
 
-    val times = raw.map { case (n, runs) =>
-      // Median over SUCCESSFUL runs only: -1 sentinels sorting to the
-      // front would otherwise pick an optimistic percentile of the
-      // survivors. Fewer than 3 clean runs -> no defensible median.
-      val ok = runs.filter(_ >= 0).sorted
-      n -> (if (ok.size >= 3) ok(ok.size / 2) else -1.0)
-    }
-    val minsByName = raw.map { case (n, runs) =>
-      val ok = runs.filter(_ >= 0)
-      n -> (if (ok.nonEmpty) ok.min else -1.0)
-    }
-
-    def fmt(d: Double): String = "%.4f".format(d)
-    val qs = times.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    val mins = minsByName.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    val allRuns = raw.map { case (k, runs) =>
-      "\"" + k + "\":[" + runs.map(fmt).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val total = times.map(_._2).filter(_ >= 0).sum
-    val totalMin = minsByName.map(_._2).filter(_ >= 0).sum
-
-    val s27med = times.collect { case (n, v) if isShared(n) && v >= 0 => v }.sum
-    val s27min = minsByName.collect { case (n, v) if isShared(n) && v >= 0 => v }.sum
-    // Early-load trip: the end-of-run shared-27 pass sums well below the
-    // timed medians ⇒ the timed phase was inflated by load that has since
-    // lifted. Armed only when the headline sum is substantial (≥ 2 s) —
-    // a sub-second 27-sum is scheduler noise, same reasoning as the
-    // sub-second sentinel loosening.
+    val total = stats.map(_._2.median).filter(_ >= 0).sum
+    val totalMin = stats.map(_._2.min).filter(_ >= 0).sum
+    val s27med = stats.collect { case (n, st) if isShared(n) && st.median >= 0 => st.median }.sum
+    val s27min = stats.collect { case (n, st) if isShared(n) && st.min >= 0 => st.min }.sum
     val retimeRatio = if (s27med > 0 && retimeSum > 0) retimeSum / s27med else -1.0
-    val earlyLoad = s27med >= 2.0 && retimeRatio > 0 && retimeRatio < 0.7
+    val earlyLoad = earlyLoadTrip(s27med, retimeRatio)
 
     // Trimmed spread (2nd-highest / 2nd-lowest of the ~9 samples): raw
     // max/min on a sub-second sentinel is scheduler noise — a single
     // 0.11 s outlier reads as spread 1.7 on an idle host. One outlier per
     // end is discarded; a genuine mid-run condition shift inflates several
     // samples and still trips the gate.
-    val spread = {
-      val s = sentinelTimes.filter(_ > 0).sorted
-      if (s.size >= 4) s(s.size - 2) / s(1)
-      else if (s.size >= 2) s.last / s.head
+    val sentinelOk = sentinelTimes.filter(_ > 0).sorted
+    val spread =
+      if (sentinelOk.size >= 4) sentinelOk(sentinelOk.size - 2) / sentinelOk(1)
+      else if (sentinelOk.size >= 2) sentinelOk.last / sentinelOk.head
       else -1.0
-    }
+    val sentinelMedian = if (sentinelOk.nonEmpty) sentinelOk(sentinelOk.size / 2) else -1.0
     // Inflation index: median/min ratio per substantial query, then the
     // median of those ratios. Load-sensitive but plan-insensitive — a
     // changed plan moves median AND min together; ambient load moves only
     // the median. Tiny queries (< 0.15 s min) are excluded: their ratios
     // are timer noise.
-    val ratios = raw.flatMap { case (n, runs) =>
-      val ok = runs.filter(_ >= 0).sorted
-      if (ok.size >= 3 && ok.head >= 0.15) Some(ok(ok.size / 2) / ok.head) else None
+    val ratios = stats.collect {
+      case (_, st) if st.median >= 0 && st.min >= 0.15 => st.median / st.min
     }.sorted
     val inflation = if (ratios.nonEmpty) ratios(ratios.size / 2) else -1.0
-    // Two signals, corroborated (r7 lesson): at sf1 the sub-second q01
-    // sentinel's own run-to-run variance (0.23–0.84 s, page cache + GC on
-    // a 10× fixture) tripped the bare spread gate on a provably quiet
-    // host (inflation 1.08, per-query runs tight). A spread trip alone is
-    // only trusted with at least mild corroboration from the
-    // plan-insensitive inflation index; a strong inflation trip (the r6
-    // failure mode the 3-point sentinel missed) stands on its own.
-    // When no query yields an inflation ratio (all <3 ok runs or sub-0.15 s
-    // mins — e.g. a tiny-SF smoke run), there is no corroborating signal,
-    // so a spread trip must stand on its own rather than being silently
-    // discarded.
-    // The spread threshold scales with the sentinel's magnitude (r9): the
-    // RELATIVE spread of a sub-second timing is dominated by its own
-    // GC/page-cache jitter — at sf1 a quiet host measured 0.23–0.84 s —
-    // while a multi-second sentinel's ratio is a real load signal. Below
-    // a 1 s median the gate loosens to 3.0.
-    val sentinelMedian = {
-      val s = sentinelTimes.filter(_ > 0).sorted
-      if (s.nonEmpty) s(s.size / 2) else -1.0
-    }
-    val spreadGate = if (sentinelMedian > 0 && sentinelMedian < 1.0) 3.0 else 1.5
-    val contaminated =
-      (inflation > 1.4) || (spread > spreadGate && (ratios.isEmpty || inflation > 1.15)) ||
-        earlyLoad
+    val contaminated = inflationTrip(inflation) ||
+      spreadTrip(spread, sentinelMedian, inflation, hasRatios = ratios.nonEmpty) || earlyLoad
 
-    val sentinel =
-      s"""{"query":"$sentinelName","times":[${sentinelTimes.map(fmt).mkString(",")}],"spread":${fmt(spread)}}"""
-    val skippedJson = skipped.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val annFitJson = annFitTimes
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    val sideJson = sideTimes
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    val retimeJson =
-      s"""{"sum_sec":${fmt(retimeSum)},"ratio_vs_median":${fmt(retimeRatio)},"early_load_trip":$earlyLoad}"""
-    val suspectJson = suspectRetimes.map { case (n, med, mn, rt) =>
-      val ratio = if (rt > 0 && med > 0) rt / med else -1.0
-      "\"" + n + "\":" +
-        s"""{"median":${fmt(med)},"min":${fmt(mn)},"retime":${fmt(rt)},"ratio_vs_median":${fmt(ratio)}}"""
-    }.mkString("{", ",", "}")
-    val hostJson =
-      s"""{"load_avg_start":${fmt(loadStart)},"load_avg_end":${fmt(loadAvg())},"cpus":${Runtime.getRuntime.availableProcessors}}"""
-    val envMeta =
-      s""""sf":"$sfDir","protocol":"warmup+median-of-$runsPerQuery","failed":${failed.size},"n_queries":${names.size},"skipped":$skippedJson,"shared27_median_sec":${fmt(s27med)},"shared27_min_sec":${fmt(s27min)},"total_min_sec":${fmt(totalMin)},"inflation_index":${fmt(inflation)},"contaminated":$contaminated,"host":$hostJson,"shared27_retime":$retimeJson,"suspect_retime":$suspectJson,"ann_fit_sec":$annFitJson,"side_queries_sec":$sideJson,"sentinel":$sentinel"""
-    val fullJson =
-      s"""{"metric":"total_median_sec","value":${fmt(total)},"unit":"sec","queries":$qs,$envMeta,"queries_min":$mins,"runs":$allRuns}"""
-    val slowest = times.filter(_._2 >= 0).sortBy(-_._2).take(8)
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    val compactJson =
-      s"""{"metric":"total_median_sec","value":${fmt(total)},"unit":"sec",$envMeta,"slowest":$slowest,"full":"bench_out.json"}"""
+    def f4(d: Double) = Json.Fixed(d, 4)
+    def secs(xs: Seq[(String, Double)]) = ListMap(xs.map { case (k, v) => k -> f4(v) }: _*)
+    val envMeta = ListMap[String, Any](
+      "sf" -> sfDir, "protocol" -> s"warmup+median-of-$runsPerQuery",
+      "failed" -> failed.size, "n_queries" -> names.size, "skipped" -> skipped.toSeq.sorted,
+      "shared27_median_sec" -> f4(s27med), "shared27_min_sec" -> f4(s27min),
+      "total_min_sec" -> f4(totalMin), "inflation_index" -> f4(inflation),
+      "contaminated" -> contaminated,
+      "host" -> ListMap("load_avg_start" -> f4(loadStart), "load_avg_end" -> f4(loadAvg()),
+        "cpus" -> Runtime.getRuntime.availableProcessors),
+      "shared27_retime" -> ListMap("sum_sec" -> f4(retimeSum),
+        "ratio_vs_median" -> f4(retimeRatio), "early_load_trip" -> earlyLoad),
+      "suspect_retime" -> ListMap(suspectRetimes.map { case (n, st, rt) =>
+        n -> ListMap("median" -> f4(st.median), "min" -> f4(st.min), "retime" -> f4(rt),
+          "ratio_vs_median" -> f4(if (rt > 0 && st.median > 0) rt / st.median else -1.0))
+      }: _*),
+      "ann_fit_sec" -> secs(annFitTimes), "side_queries_sec" -> secs(sideTimes),
+      "sentinel" -> ListMap("query" -> sentinelName, "times" -> sentinelTimes.map(f4),
+        "spread" -> f4(spread)))
+    val head = ListMap[String, Any]("metric" -> "total_median_sec", "value" -> f4(total), "unit" -> "sec")
+    val fullJson = Json(head ++ ListMap("queries" -> secs(stats.map { case (n, st) => n -> st.median })) ++
+      envMeta ++ ListMap("queries_min" -> secs(stats.map { case (n, st) => n -> st.min }),
+        "runs" -> ListMap(raw.map { case (n, runs) => n -> runs.map(f4) }: _*)))
+    val slowest = stats.map { case (n, st) => n -> st.median }.filter(_._2 >= 0).sortBy(-_._2).take(8)
+    val compactJson = Json(head ++ envMeta ++
+      ListMap("slowest" -> secs(slowest), "full" -> "bench_out.json"))
 
     java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), fullJson)
     println("GRAFT_BENCH_JSON")

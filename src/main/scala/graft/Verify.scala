@@ -28,27 +28,13 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter { case (k, _) => selected(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Json(SparkEntry.oracleSql.filter { case (k, _) => selected(k) }))
     // Oracle-less entries are not unchecked: gates.json names each one's
     // ScalaTest property/recall/parity gate so the artifact distinguishes
     // "approximate, gated elsewhere" from "broken" (r9 verdict item 5).
-    val gatesJson = SparkEntry.gates.filter { case (k, _) => selected(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/gates.json"), gatesJson)
+    Files.writeString(Paths.get(s"$outDir/gates.json"),
+      Json(SparkEntry.gates.filter { case (k, _) => selected(k) }))
     spark.stop()
   }
 }

@@ -203,6 +203,19 @@ object DedupSuite {
       .orderBy("dropped_id")
   }
 
+  /** Exact keep-lowest-id cosine dedup (tau 0.3) on the vec_id < 100
+    * slice — the one truth for q68 (exact pairs) and q139 (LSH bucket
+    * join as the candidate generator). */
+  private val cosineDedupOracle =
+    "WITH e AS (SELECT vec_id, embedding, " +
+      "sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm " +
+      "FROM embeddings WHERE vec_id < 100) " +
+      "SELECT b.vec_id AS dropped_id, min(a.vec_id) AS dup_of, count(*) AS n_earlier_dups " +
+      "FROM e a JOIN e b ON a.vec_id < b.vec_id " +
+      "WHERE list_sum(list_transform(list_zip(a.embedding, b.embedding), " +
+      "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) / (a.nrm * b.nrm) >= 0.3 " +
+      "GROUP BY b.vec_id ORDER BY dropped_id"
+
   val specs: Seq[QuerySpec] = Seq(
 
     // Exact 3-gram shingle Jaccard on a candidate set — the refine step
@@ -357,14 +370,7 @@ object DedupSuite {
             count(lit(1)).as("n_earlier_dups"))
           .orderBy("dropped_id")
       },
-      Some("WITH e AS (SELECT vec_id, embedding, " +
-        "sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm " +
-        "FROM embeddings WHERE vec_id < 100) " +
-        "SELECT b.vec_id AS dropped_id, min(a.vec_id) AS dup_of, count(*) AS n_earlier_dups " +
-        "FROM e a JOIN e b ON a.vec_id < b.vec_id " +
-        "WHERE list_sum(list_transform(list_zip(a.embedding, b.embedding), " +
-        "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) / (a.nrm * b.nrm) >= 0.3 " +
-        "GROUP BY b.vec_id ORDER BY dropped_id")
+      Some(cosineDedupOracle)
     ),
 
     // The composed pipeline q68's comment promises: LSH bucket join as
@@ -375,14 +381,7 @@ object DedupSuite {
     // q139 ≡ q68 plus the no-cartesian plan shape).
     QuerySpec("q139_lsh_cosine_dedup",
       (s, d) => lshCosineDedup(s, d, tau = 0.3, idBound = 100L),
-      Some("WITH e AS (SELECT vec_id, embedding, " +
-        "sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm " +
-        "FROM embeddings WHERE vec_id < 100) " +
-        "SELECT b.vec_id AS dropped_id, min(a.vec_id) AS dup_of, count(*) AS n_earlier_dups " +
-        "FROM e a JOIN e b ON a.vec_id < b.vec_id " +
-        "WHERE list_sum(list_transform(list_zip(a.embedding, b.embedding), " +
-        "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) / (a.nrm * b.nrm) >= 0.3 " +
-        "GROUP BY b.vec_id ORDER BY dropped_id")
+      Some(cosineDedupOracle)
     )
   )
 }

@@ -3,8 +3,6 @@ package graft.ext
 import graft.{QuerySpec, Tables}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
-
 /** Scale-technique operators: the two pruning layers a 100 TB pipeline
   * puts IN FRONT of exact work so the exact work never sees most of the
   * data — while the final answer stays exact (and therefore oracle-able).
@@ -32,35 +30,8 @@ import java.nio.file.Files
 object ScaleOps {
 
   // Staged layouts must outlive the query (the returned DataFrame reads
-  // them lazily) — same JVM-lifetime temp root pattern as SourceFormats.
-  private lazy val root: java.nio.file.Path = {
-    val r = Files.createTempDirectory("graft-scaleops")
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      graft.TmpFiles.deleteRecursively(r.toString)))
-    r
-  }
-
-  /** q73's shingle fingerprint: distinct 60-bit md5-derived 3-gram hashes
-    * per doc, docs under 3 tokens dropped (shared Spark/DuckDB semantics —
-    * see q73's Scaladoc for the ANSI slice() edge). */
-  private def grams(s: org.apache.spark.sql.SparkSession, d: String) =
-    Tables(s, d, "documents")
-      .filter(col("doc_id") < 200)
-      .select(col("doc_id"), expr("filter(split(text, ' '), x -> x <> '')").as("tk"))
-      .filter(expr("size(tk) >= 3"))
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(tk) - 2), " +
-          "i -> CAST(conv(substring(md5(concat_ws(' ', slice(tk, i, 3))), 1, 15), 16, 10) AS BIGINT))"))
-        .as("h"))
-      .distinct()
-
-  /** The DuckDB-side gram CTE fragment shared by the q136 oracle. */
-  private val duckGrams =
-    "WITH toks AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk " +
-      "FROM documents WHERE doc_id < 200), " +
-      "g AS (SELECT DISTINCT doc_id, CAST(concat('0x', substr(md5(concat_ws(' ', " +
-      "tk[i], tk[i+1], tk[i+2])), 1, 15)) AS BIGINT) AS h " +
-      "FROM (SELECT doc_id, tk, unnest(generate_series(1, greatest(len(tk) - 2, 0))) AS i FROM toks)) "
+  // them lazily).
+  private lazy val root = graft.TmpFiles.jvmRoot("graft-scaleops")
 
   // Range-clustered lineitem layout per dataset dir, written ONCE per JVM
   // (r9 verdict: per-invocation rewrite made the q137 bench time ~90%
@@ -150,7 +121,9 @@ object ScaleOps {
 
     QuerySpec("q136_bloom_decontam",
       (s, d) => {
-        grams(s, d).createOrReplaceTempView("q136_grams")
+        // q73's shingles over the same doc_id < 200 slice.
+        TextSuite.trigramHashes(Tables(s, d, "documents").filter(col("doc_id") < 200))
+          .createOrReplaceTempView("q136_grams")
         Tables(s, d, "documents").select("doc_id").createOrReplaceTempView("q136_docs")
         // The bloom is built as a SCALAR SUBQUERY over the eval grams —
         // BloomFilterMightContain requires a foldable/subquery sketch, and
@@ -171,7 +144,7 @@ object ScaleOps {
             |LEFT ANTI JOIN bad USING (doc_id)
             |ORDER BY doc_id""".stripMargin)
       },
-      Some(duckGrams +
+      Some(TextSuite.duckTrigrams +
         ", bad AS (SELECT DISTINCT t.doc_id FROM g t JOIN g e ON t.h = e.h " +
         "AND e.doc_id >= 190 WHERE t.doc_id >= 10 AND t.doc_id < 190) " +
         "SELECT doc_id FROM documents WHERE doc_id >= 10 AND doc_id < 190 " +

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.{QuerySpec, Tables}
+import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -29,19 +30,56 @@ object SimilaritySuite {
       .select(col("vec_id"), col("embedding"),
         sqrt(dot("embedding", "embedding")).as("nrm"))
 
+  /** The corpus as (vec_id, arr DOUBLE[]): `vecsIn` (vec_id, embedding)
+    * when given, else the `embeddings` table — the one reader every ANN,
+    * dedup and fit path (and tools.RecallGate's exact scoring) runs on. */
+  private[graft] def corpus(s: SparkSession, d: String, vecsIn: DataFrame = null): DataFrame =
+    (if (vecsIn != null) vecsIn else Tables(s, d, "embeddings"))
+      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("arr"))
+
+  /** [[corpus]] rows as (vec_id, features ml.Vector), cached — the input
+    * form of the LSH and KMeans fits. */
+  private def vectorized(corpus: DataFrame): DataFrame = {
+    import corpus.sparkSession.implicits._
+    corpus.as[(Long, Seq[Double])]
+      .map { case (id, a) => (id, Vectors.dense(a.toArray)) }
+      .toDF("vec_id", "features")
+      .cache()
+  }
+
+  /** The KMeans coarse quantizer over [[vectorized]] rows, shared by q53,
+    * q91 and q135: fixed seed, fit on a 10 % sample (decoupled from corpus
+    * size; the full corpus is then assigned), falling back to the whole
+    * corpus when the sample is under 10·nlist rows so tiny fixtures stay
+    * trainable. */
+  private def fitCoarse(vecs: DataFrame, nlist: Int): KMeansModel = {
+    val km = new KMeans()
+      .setK(nlist).setSeed(42).setFeaturesCol("features").setPredictionCol("cell")
+    val sampled = vecs.sample(withReplacement = false, 0.1, seed = 42)
+    km.fit(if (sampled.limit(10 * nlist).count() < 10L * nlist) vecs else sampled)
+  }
+
+  /** Dot product of two local arrays, accumulated left to right. */
+  private def dotArr(a: Array[Double], b: Array[Double]): Double = {
+    var s0 = 0.0; var i = 0
+    while (i < a.length) { s0 += a(i) * b(i); i += 1 }; s0
+  }
+
+  /** `embeddings` with the symmetric int8 scale `m` (the corpus max |x|, a
+    * one-scalar aggregate broadcast back) on every row — q78/q79's first
+    * pass. */
+  private def withInt8Scale(s: SparkSession, d: String): DataFrame = {
+    val emb = Tables(s, d, "embeddings")
+    emb.crossJoin(broadcast(emb.agg(
+      max(expr("array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE))))")).as("m"))))
+  }
+
   /** ANN top-k for one probe via LSH: deterministic with fixed seed.
     * `vecsIn` (vec_id, embedding ARRAY&lt;FLOAT&gt;) substitutes the corpus —
     * used by the clustered-fixture recall gate in SimilaritySpec. */
   def annTopK(s: SparkSession, d: String, probeId: Long, k: Int,
       vecsIn: DataFrame = null): DataFrame = {
-    import s.implicits._
-    val vecs = (if (vecsIn != null) vecsIn else Tables(s, d, "embeddings"))
-      .select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("arr"))
-      .as[(Long, Seq[Double])]
-      .map { case (id, a) => (id, Vectors.dense(a.toArray)) }
-      .toDF("vec_id", "features")
-      .cache()
+    val vecs = vectorized(corpus(s, d, vecsIn))
     val lsh = new BucketedRandomProjectionLSH()
       .setInputCol("features").setOutputCol("hashes")
       .setBucketLength(2.0).setNumHashTables(6).setSeed(42)
@@ -60,36 +98,23 @@ object SimilaritySuite {
   // (`ann_fit_sec`), so the per-query medians measure the SERVE path.
   private val pqMemo = scala.collection.mutable.Map.empty[String, PqModel]
   private val ivfMemo =
-    scala.collection.mutable.Map.empty[(String, Int), org.apache.spark.ml.clustering.KMeansModel]
+    scala.collection.mutable.Map.empty[(String, Int), KMeansModel]
   private val ivfPqMemo = scala.collection.mutable.Map.empty[(String, Int), IvfPqModel]
 
   def cachedPq(s: SparkSession, d: String): PqModel =
     pqMemo.synchronized(pqMemo.getOrElseUpdate(d, fitPq(s, d)))
 
-  def cachedIvf(s: SparkSession, d: String, nlist: Int): org.apache.spark.ml.clustering.KMeansModel =
+  def cachedIvf(s: SparkSession, d: String, nlist: Int): KMeansModel =
     ivfMemo.synchronized(ivfMemo.getOrElseUpdate((d, nlist), fitIvf(s, d, nlist)))
 
   def cachedIvfPq(s: SparkSession, d: String, nlist: Int): IvfPqModel =
     ivfPqMemo.synchronized(ivfPqMemo.getOrElseUpdate((d, nlist), fitIvfPq(s, d, nlist)))
 
-  /** q53's coarse quantizer as a standalone fit job (sample-sized, same
-    * discipline as [[ivfTopK]]'s inline fit — fixed seed, 10·nlist floor). */
+  /** q53's coarse quantizer ([[fitCoarse]]) as a standalone fit job. */
   def fitIvf(s: SparkSession, d: String, nlist: Int = 16,
-      vecsIn: DataFrame = null): org.apache.spark.ml.clustering.KMeansModel = {
-    import s.implicits._
-    val vecs = (if (vecsIn != null) vecsIn else Tables(s, d, "embeddings"))
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("arr"))
-      .as[(Long, Seq[Double])]
-      .map { case (id, a) => (id, Vectors.dense(a.toArray)) }
-      .toDF("vec_id", "features")
-      .cache()
-    try {
-      val km = new org.apache.spark.ml.clustering.KMeans()
-        .setK(nlist).setSeed(42).setFeaturesCol("features").setPredictionCol("cell")
-      val sampled = vecs.sample(withReplacement = false, 0.1, seed = 42)
-      val fitInput = if (sampled.limit(10 * nlist).count() < 10L * nlist) vecs else sampled
-      km.fit(fitInput)
-    } finally { vecs.unpersist(); () }
+      vecsIn: DataFrame = null): KMeansModel = {
+    val vecs = vectorized(corpus(s, d, vecsIn))
+    try fitCoarse(vecs, nlist) finally { vecs.unpersist(); () }
   }
 
   /** IVF-style ANN: a KMeans coarse quantizer (nlist cells) assigns every
@@ -100,35 +125,19 @@ object SimilaritySuite {
     * (memoized or loaded) quantizer — the fit-once path; refit when absent. */
   def ivfTopK(s: SparkSession, d: String, probeId: Long, k: Int,
       nlist: Int = 16, nprobe: Int = 4, vecsIn: DataFrame = null,
-      modelIn: org.apache.spark.ml.clustering.KMeansModel = null): DataFrame = {
-    import s.implicits._
-    val base = (if (vecsIn != null) vecsIn else Tables(s, d, "embeddings"))
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("arr"))
+      modelIn: KMeansModel = null): DataFrame = {
+    val base = corpus(s, d, vecsIn)
     // KMeans.transform is one linear pass, but probe extraction + the
     // cell-filtered refine share it — cache the vectorized form.
-    val vecs = base.as[(Long, Seq[Double])]
-      .map { case (id, a) => (id, Vectors.dense(a.toArray)) }
-      .toDF("vec_id", "features")
-      .cache()
-    val model = if (modelIn != null) modelIn else {
-      val km = new org.apache.spark.ml.clustering.KMeans()
-        .setK(nlist).setSeed(42).setFeaturesCol("features").setPredictionCol("cell")
-      // The coarse quantizer only needs a representative sample: fit on a
-      // bounded fraction (decoupled from corpus size), assign the full
-      // corpus. Floor of 10·nlist rows keeps tiny fixtures trainable.
-      val sampled = vecs.sample(withReplacement = false, 0.1, seed = 42)
-      val fitInput = if (sampled.limit(10 * nlist).count() < 10L * nlist) vecs else sampled
-      km.fit(fitInput)
-    }
+    val vecs = vectorized(base)
+    val model = if (modelIn != null) modelIn else fitCoarse(vecs, nlist)
     val probe = vecs.filter(col("vec_id") === probeId)
       .head().getAs[org.apache.spark.ml.linalg.Vector]("features")
     // Probe the cells whose centroids have max INNER PRODUCT with the
     // query — the refine metric is the dot product, and for
     // non-normalized vectors euclidean-nearest cells are the wrong ones.
-    def dot(a: org.apache.spark.ml.linalg.Vector, b: org.apache.spark.ml.linalg.Vector): Double =
-      a.toArray.zip(b.toArray).map { case (x, y) => x * y }.sum
     val cells = model.clusterCenters.zipWithIndex
-      .sortBy { case (c, _) => -dot(c, probe) }
+      .sortBy { case (c, _) => -dotArr(c.toArray, probe.toArray) }
       .take(nprobe).map(_._2).toSeq
     val probeArr = typedLit(probe.toArray.toSeq)
     model.transform(vecs).select("vec_id", "cell")
@@ -164,11 +173,9 @@ object SimilaritySuite {
       vecsIn: DataFrame = null): DataFrame = {
     val rnd = new scala.util.Random(42)
     val dim = 64
-    val unit = (if (vecsIn != null) vecsIn else Tables(s, d, "embeddings"))
+    val unit = corpus(s, d, vecsIn)
       .select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-      .select(col("vec_id"),
-        expr("transform(emb, x -> x / sqrt(array_dot(emb, emb)))").as("unit"))
+        expr("transform(arr, x -> x / sqrt(array_dot(arr, arr)))").as("unit"))
     def projLit(): String =
       "array(" + Seq.fill(dim)(rnd.nextGaussian())
         .map(x => s"CAST($x AS DOUBLE)").mkString(",") + ")"
@@ -213,18 +220,10 @@ object SimilaritySuite {
   def semanticDedup(s: SparkSession, d: String, tau: Double, nlist: Int = 16,
       vecsIn: DataFrame = null): DataFrame = {
     import s.implicits._
-    val base = (if (vecsIn != null) vecsIn else Tables(s, d, "embeddings"))
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("arr"))
-    val vecs = base.as[(Long, Seq[Double])]
-      .map { case (id, a) => (id, Vectors.dense(a.toArray)) }
-      .toDF("vec_id", "features").cache()
+    val base = corpus(s, d, vecsIn)
+    val vecs = vectorized(base)
     try {
-      val km = new org.apache.spark.ml.clustering.KMeans()
-        .setK(nlist).setSeed(42).setFeaturesCol("features").setPredictionCol("cell")
-      val sampled = vecs.sample(withReplacement = false, 0.1, seed = 42)
-      val fitInput = if (sampled.limit(10 * nlist).count() < 10L * nlist) vecs else sampled
-      val model = km.fit(fitInput)
-      val asg = model.transform(vecs).select(col("vec_id"), col("cell"))
+      val asg = fitCoarse(vecs, nlist).transform(vecs).select(col("vec_id"), col("cell"))
         .join(base, "vec_id")
         .withColumn("nrm", sqrt(expr("array_dot(arr, arr)")))
       val a = asg.select(col("cell").as("c1"), col("vec_id").as("a_id"),
@@ -307,7 +306,7 @@ object SimilaritySuite {
     * subspaces in ONE pipeline (explode each sampled vector into its m
     * subvectors; every iteration is one assignment-and-average job over
     * the sample), instead of m separate ml.KMeans fits — same sample
-    * discipline as [[ivfTopK]]'s coarse quantizer, m× fewer jobs.
+    * discipline as [[fitCoarse]], m× fewer jobs.
     *
     * Deterministic by construction: md5-ordered initial centroids, a fixed
     * iteration count, and DECIMAL(28,12) mean accumulation so the
@@ -315,9 +314,7 @@ object SimilaritySuite {
     * are not); empty cells keep their previous centroid. */
   def fitPq(s: SparkSession, d: String, m: Int = 16, ksub: Int = 16,
       iters: Int = 4, vecsIn: DataFrame = null): PqModel = {
-    val base = (if (vecsIn != null) vecsIn else Tables(s, d, "embeddings"))
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("arr"))
-
+    val base = corpus(s, d, vecsIn)
     val sampled = base.sample(withReplacement = false, 0.1, seed = 42)
     val fitInput =
       (if (sampled.limit(10 * ksub).count() < 10L * ksub) base else sampled).cache()
@@ -380,6 +377,45 @@ object SimilaritySuite {
           element_at(cbLit, j + 1), model.ksub)).as("codes"))
   }
 
+  /** Probe `probeId`'s vector from a [[corpus]] frame. */
+  private def probeVec(base: DataFrame, probeId: Long): Array[Double] =
+    base.filter(col("vec_id") === probeId).head().getSeq[Double](1).toArray
+
+  /** Estimated ⟨probe, vec⟩ of a row's PQ `codes` by asymmetric distance
+    * computation: an m×ksub table of INNER PRODUCTS ⟨probe_sub_j,
+    * codebook_j,c⟩, computed locally and broadcast as a literal, and Σ_j
+    * dt[j][code_j] as one codegen'd fold — so the candidate ranking lives
+    * in the SAME metric as the exact rerank (euclidean ADC on
+    * non-normalized vectors ranks a different neighbourhood than the dot
+    * product and costs real recall).
+    *
+    * `codes` is referenced exactly ONCE: HOFs are interpreted, and
+    * CollapseProject inlines the encode projection into this lambda — an
+    * element_at(codes, j) per fold step would re-evaluate the whole m×ksub
+    * argmin encode m times per row (measured 8× slower). Zipping codes
+    * with the subspace indices keeps one evaluation per row. */
+  private def adcScore(probe: Array[Double], pq: PqModel): org.apache.spark.sql.Column = {
+    val dt = Array.tabulate(pq.m, pq.ksub) { (j, c) =>
+      dotArr(probe.slice(j * pq.sub, j * pq.sub + pq.sub), pq.codebooks(j)(c))
+    }
+    val dtLit = typedLit(dt.map(_.toSeq).toSeq)
+    aggregate(
+      zip_with(col("codes"), sequence(lit(0), lit(pq.m - 1)),
+        (c, j) => element_at(element_at(dtLit, j + 1), c + 1)),
+      lit(0.0), (acc, v) => acc + v)
+  }
+
+  /** The exact refine shared by the PQ entries: the ADC top rerank·k rows
+    * of `adc` (vec_id, adc), reranked by their exact dot with `probe`. */
+  private def exactRerank(adc: DataFrame, base: DataFrame, probe: Array[Double],
+      k: Int, rerank: Int): DataFrame =
+    adc.orderBy(col("adc").desc, col("vec_id")).limit(rerank * k)
+      .join(base, "vec_id")
+      .withColumn("pvec", typedLit(probe.toSeq))
+      .select(col("vec_id"), round(col("adc"), 6).as("adc"),
+        round(expr("array_dot(arr, pvec)"), 6).as("dot"))
+      .orderBy(col("dot").desc, col("vec_id")).limit(k)
+
   /** PQ-ADC ANN: fit codebooks on a sample, encode the corpus to m small
     * codes, then answer a probe by ASYMMETRIC DISTANCE COMPUTATION — the
     * probe's per-subspace inner products with every centroid form an
@@ -397,45 +433,15 @@ object SimilaritySuite {
   def pqTopK(s: SparkSession, d: String, probeId: Long, k: Int,
       m: Int = 16, ksub: Int = 16, rerank: Int = 8,
       vecsIn: DataFrame = null, modelIn: PqModel = null): DataFrame = {
-    val base = (if (vecsIn != null) vecsIn else Tables(s, d, "embeddings"))
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("arr"))
+    val base = corpus(s, d, vecsIn)
     // Serve from a pre-fitted model when provided — the fit-once path;
     // refit only when absent.
     val model = if (modelIn != null) modelIn else fitPq(s, d, m, ksub, vecsIn = vecsIn)
-    val probe = base.filter(col("vec_id") === probeId)
-      .head().getSeq[Double](1).toArray
-
-    // m×ksub ADC table of INNER PRODUCTS ⟨probe_sub_j, codebook_j,c⟩,
-    // driver-computed: the estimated dot is Σ_j dt[j][code_j], so the
-    // candidate ranking lives in the SAME metric as the exact rerank
-    // (euclidean ADC on non-normalized vectors ranks a different
-    // neighbourhood than the dot product and costs real recall).
-    val dt = Array.tabulate(model.m, model.ksub) { (j, c) =>
-      val p = probe.slice(j * model.sub, j * model.sub + model.sub)
-      p.zip(model.codebooks(j)(c)).map { case (x, y) => x * y }.sum
-    }
-    val dtLit = typedLit(dt.map(_.toSeq).toSeq)
-
-    // `codes` must be referenced exactly ONCE here: HOFs are interpreted,
-    // and CollapseProject inlines the encode projection into this lambda —
-    // an element_at(codes, j) per fold step would re-evaluate the whole
-    // m×ksub argmin encode m times per row (measured 8× slower). Zipping
-    // codes with the subspace indices keeps one evaluation per row.
+    val probe = probeVec(base, probeId)
     val adc = pqEncode(base, model)
       .filter(col("vec_id") =!= probeId)
-      .select(col("vec_id"),
-        aggregate(
-          zip_with(col("codes"), sequence(lit(0), lit(model.m - 1)),
-            (c, j) => element_at(element_at(dtLit, j + 1), c + 1)),
-          lit(0.0), (acc, v) => acc + v).as("adc"))
-      .orderBy(col("adc").desc, col("vec_id")).limit(rerank * k)
-
-    val probeLit = typedLit(probe.toSeq)
-    adc.join(base, "vec_id")
-      .withColumn("pvec", probeLit)
-      .select(col("vec_id"), round(col("adc"), 6).as("adc"),
-        round(expr("array_dot(arr, pvec)"), 6).as("dot"))
-      .orderBy(col("dot").desc, col("vec_id")).limit(k)
+      .select(col("vec_id"), adcScore(probe, model).as("adc"))
+    exactRerank(adc, base, probe, k, rerank)
   }
 
   /** Fit the q135 IVF-PQ index: q53's sample-disciplined KMeans coarse
@@ -445,20 +451,12 @@ object SimilaritySuite {
     * of the fit-once / serve-many production split. */
   def fitIvfPq(s: SparkSession, d: String, nlist: Int = 16, m: Int = 16,
       ksub: Int = 16, vecsIn: DataFrame = null): IvfPqModel = {
-    import s.implicits._
-    val base = (if (vecsIn != null) vecsIn else Tables(s, d, "embeddings"))
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("arr"))
-    val vecs = base.as[(Long, Seq[Double])]
-      .map { case (id, a) => (id, Vectors.dense(a.toArray)) }
-      .toDF("vec_id", "features").cache()
+    val base = corpus(s, d, vecsIn)
+    val vecs = vectorized(base)
     var residuals: DataFrame = null
     try {
       // Coarse quantizer — q53's exact discipline (sample-sized fit).
-      val km = new org.apache.spark.ml.clustering.KMeans()
-        .setK(nlist).setSeed(42).setFeaturesCol("features").setPredictionCol("cell")
-      val sampled = vecs.sample(withReplacement = false, 0.1, seed = 42)
-      val fitInput = if (sampled.limit(10 * nlist).count() < 10L * nlist) vecs else sampled
-      val centers = km.fit(fitInput).clusterCenters.map(_.toArray)
+      val centers = fitCoarse(vecs, nlist).clusterCenters.map(_.toArray)
       val centersLit = typedLit(centers.map(_.toSeq).toSeq)
 
       // Residuals: arr − center[cell]; `arr` and the center literal are
@@ -496,67 +494,40 @@ object SimilaritySuite {
       nlist: Int = 16, nprobe: Int = 4, m: Int = 16, ksub: Int = 16,
       rerank: Int = 8, vecsIn: DataFrame = null,
       modelIn: IvfPqModel = null): DataFrame = {
-    val base = (if (vecsIn != null) vecsIn else Tables(s, d, "embeddings"))
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("arr"))
+    val base = corpus(s, d, vecsIn)
     // Serve from a pre-fitted model when provided; refit only when
     // absent. Serving itself is ONE linear
     // chain over the corpus — assign cell, residual-encode — with no
     // re-attach join (the r8 shape joined codes back to cells; keeping
     // `cell` in the chain drops that shuffle entirely).
-    locally {
-      val model = if (modelIn != null) modelIn
-        else fitIvfPq(s, d, nlist, m, ksub, vecsIn = vecsIn)
-      val centers = model.centers
-      val pq = model.pq
-      val centersLit = typedLit(centers.map(_.toSeq).toSeq)
-      val encoded = base
-        .withColumn("cell", nearestCenterUdf(centers)(col("arr")))
-        .select(col("vec_id"), col("cell"),
-          call_function("pq_encode",
-            zip_with(col("arr"), element_at(centersLit, col("cell") + 1),
-              (x, c) => x - c),
-            pq.codebookLit).as("codes"))
+    val model = if (modelIn != null) modelIn
+      else fitIvfPq(s, d, nlist, m, ksub, vecsIn = vecsIn)
+    val centers = model.centers
+    val pq = model.pq
+    val centersLit = typedLit(centers.map(_.toSeq).toSeq)
+    val encoded = base
+      .withColumn("cell", nearestCenterUdf(centers)(col("arr")))
+      .select(col("vec_id"), col("cell"),
+        call_function("pq_encode",
+          zip_with(col("arr"), element_at(centersLit, col("cell") + 1),
+            (x, c) => x - c),
+          pq.codebookLit).as("codes"))
 
-      val probe = base.filter(col("vec_id") === probeId)
-        .head().getSeq[Double](1).toArray
-      def dotArr(a: Array[Double], b: Array[Double]): Double = {
-        var s0 = 0.0; var i = 0
-        while (i < a.length) { s0 += a(i) * b(i); i += 1 }; s0
-      }
-      val probedCells = centers.zipWithIndex
-        .sortBy { case (c, _) => -dotArr(c, probe) }.take(nprobe).map(_._2)
+    val probe = probeVec(base, probeId)
+    val probedCells = centers.zipWithIndex
+      .sortBy { case (c, _) => -dotArr(c, probe) }.take(nprobe).map(_._2)
 
-      // ⟨probe, vec⟩ = ⟨probe, center_cell⟩ + ⟨probe, residual⟩ — so ONE
-      // m×ksub lookup table of ⟨probe_sub, residual-codebook⟩ serves every
-      // cell (q134's table, probe taken raw), and the cell contributes
-      // only the constant ⟨probe, center_cell⟩ term.
-      val dt = Array.tabulate(pq.m, pq.ksub) { (j, c) =>
-        val off = j * pq.sub
-        var s0 = 0.0; var t = 0
-        while (t < pq.sub) { s0 += probe(off + t) * pq.codebooks(j)(c)(t); t += 1 }
-        s0
-      }
-      val dtLit = typedLit(dt.map(_.toSeq).toSeq)
-      val centerDotLit = typedLit(centers.map(c => dotArr(c, probe)).toSeq)
-
-      val adc = encoded
-        .filter(col("cell").isin(probedCells.map(Integer.valueOf): _*) &&
-          col("vec_id") =!= probeId)
-        .select(col("vec_id"),
-          (element_at(centerDotLit, col("cell") + 1) +
-            aggregate(
-              zip_with(col("codes"), sequence(lit(0), lit(pq.m - 1)),
-                (c, j) => element_at(element_at(dtLit, j + 1), c + 1)),
-              lit(0.0), (acc, v) => acc + v)).as("adc"))
-        .orderBy(col("adc").desc, col("vec_id")).limit(rerank * k)
-
-      val probeLit = typedLit(probe.toSeq)
-      adc.join(base, "vec_id")
-        .withColumn("pvec", probeLit)
-        .select(col("vec_id"), round(col("adc"), 6).as("adc"),
-          round(expr("array_dot(arr, pvec)"), 6).as("dot"))
-        .orderBy(col("dot").desc, col("vec_id")).limit(k)
-    }
+    // ⟨probe, vec⟩ = ⟨probe, center_cell⟩ + ⟨probe, residual⟩ — so ONE
+    // m×ksub lookup table of ⟨probe_sub, residual-codebook⟩ serves every
+    // cell (q134's table, probe taken raw), and the cell contributes
+    // only the constant ⟨probe, center_cell⟩ term.
+    val centerDotLit = typedLit(centers.map(c => dotArr(c, probe)).toSeq)
+    val adc = encoded
+      .filter(col("cell").isin(probedCells.map(Integer.valueOf): _*) &&
+        col("vec_id") =!= probeId)
+      .select(col("vec_id"),
+        (element_at(centerDotLit, col("cell") + 1) + adcScore(probe, pq)).as("adc"))
+    exactRerank(adc, base, probe, k, rerank)
   }
 
   val specs: Seq[QuerySpec] = Seq(
@@ -699,20 +670,15 @@ object SimilaritySuite {
     // sum (list_reduce on the oracle side — same summation order, so the
     // doubles match bit-for-bit). Linear scan, no shuffle of the vectors.
     QuerySpec("q78_embedding_quantize",
-      (s, d) => {
-        val emb = Tables(s, d, "embeddings")
-        val scale = emb.agg(
-          max(expr("array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE))))")).as("m"))
-        emb.crossJoin(broadcast(scale))
-          .withColumn("q", expr(
-            "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 127.0 / m, 0) AS INT))"))
-          .select(col("vec_id"),
-            expr("array_min(q)").as("q_min"), expr("array_max(q)").as("q_max"),
-            expr("round(aggregate(zip_with(embedding, q, " +
-              "(x, qi) -> pow(CAST(x AS DOUBLE) - qi * m / 127.0, 2)), " +
-              "CAST(0.0 AS DOUBLE), (a, e) -> a + e), 10)").as("err"))
-          .orderBy("vec_id").limit(200)
-      },
+      (s, d) => withInt8Scale(s, d)
+        .withColumn("q", expr(
+          "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 127.0 / m, 0) AS INT))"))
+        .select(col("vec_id"),
+          expr("array_min(q)").as("q_min"), expr("array_max(q)").as("q_max"),
+          expr("round(aggregate(zip_with(embedding, q, " +
+            "(x, qi) -> pow(CAST(x AS DOUBLE) - qi * m / 127.0, 2)), " +
+            "CAST(0.0 AS DOUBLE), (a, e) -> a + e), 10)").as("err"))
+        .orderBy("vec_id").limit(200),
       Some("WITH m AS (SELECT max(list_max(list_transform(embedding, " +
         "x -> abs(CAST(x AS DOUBLE))))) AS m FROM embeddings), " +
         "q AS (SELECT vec_id, embedding, m.m, list_transform(embedding, " +
@@ -729,20 +695,15 @@ object SimilaritySuite {
       // Round-trip check of the same quantization as an aggregate: corpus
       // MSE and the worst per-vector error — the acceptance metric a
       // pipeline actually gates deployment on. Shares q78's arithmetic.
-      (s, d) => {
-        val emb = Tables(s, d, "embeddings")
-        val scale = emb.agg(
-          max(expr("array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE))))")).as("m"))
-        emb.crossJoin(broadcast(scale))
-          .select(expr("round(aggregate(transform(embedding, " +
-            "x -> pow(CAST(x AS DOUBLE) - CAST(round(CAST(x AS DOUBLE) * 127.0 / m, 0) AS INT) * m / 127.0, 2)), " +
-            "CAST(0.0 AS DOUBLE), (a, e) -> a + e) / size(embedding), 12)").as("mse"))
-          .agg(count(lit(1)).as("n_vecs"),
-            max(col("mse")).as("worst_mse"),
-            // decimal-cast before the cross-partition sum: double += is
-            // order-sensitive, decimal is exact (repo oracle rule)
-            sum(col("mse").cast("decimal(28,14)")).cast("double").as("sum_mse"))
-      },
+      (s, d) => withInt8Scale(s, d)
+        .select(expr("round(aggregate(transform(embedding, " +
+          "x -> pow(CAST(x AS DOUBLE) - CAST(round(CAST(x AS DOUBLE) * 127.0 / m, 0) AS INT) * m / 127.0, 2)), " +
+          "CAST(0.0 AS DOUBLE), (a, e) -> a + e) / size(embedding), 12)").as("mse"))
+        .agg(count(lit(1)).as("n_vecs"),
+          max(col("mse")).as("worst_mse"),
+          // decimal-cast before the cross-partition sum: double += is
+          // order-sensitive, decimal is exact (repo oracle rule)
+          sum(col("mse").cast("decimal(28,14)")).cast("double").as("sum_mse")),
       Some("WITH m AS (SELECT max(list_max(list_transform(embedding, " +
         "x -> abs(CAST(x AS DOUBLE))))) AS m FROM embeddings), " +
         "e AS (SELECT round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.{QuerySpec, Tables}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for a large-scale training-data pipeline, over
@@ -19,6 +20,67 @@ object TextSuite {
   private val enList = "('the','a','of','and','to','in','is')"
   private val deList = "('der','die','das','und','ist','nicht')"
   private val frList = "('le','la','les','et','est','une')"
+
+  /** Distinct (doc_id, h) 60-bit md5 trigram fingerprints of `docs`
+    * (doc_id, text) — the shingler behind q73, q107 and q136. Tokenize
+    * ONCE, then shingle: the transform lambda must not re-split the text
+    * per position. Docs under 3 tokens are dropped BEFORE the sequence:
+    * Spark's sequence(1, 0) descends to [1, 0] and slice(tk, 0, 3) throws
+    * under ANSI, while DuckDB's generate_series(1, 0) is empty — the
+    * filter pins the shared absent-doc semantics. */
+  private[ext] def trigramHashes(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), expr("filter(split(text, ' '), x -> x <> '')").as("tk"))
+      .filter(expr("size(tk) >= 3"))
+      .select(col("doc_id"), explode(expr(
+        "transform(sequence(1, size(tk) - 2), " +
+          "i -> CAST(conv(substring(md5(concat_ws(' ', slice(tk, i, 3))), 1, 15), 16, 10) AS BIGINT))"))
+        .as("h"))
+      .distinct()
+
+  /** The DuckDB trigram CTEs (`toks`, `g`) over docs with doc_id < 200,
+    * shared by the q73 and q136 oracles. */
+  private[ext] val duckTrigrams =
+    "WITH toks AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk " +
+      "FROM documents WHERE doc_id < 200), " +
+      "g AS (SELECT DISTINCT doc_id, CAST(concat('0x', substr(md5(concat_ws(' ', " +
+      "tk[i], tk[i+1], tk[i+2])), 1, 15)) AS BIGINT) AS h " +
+      "FROM (SELECT doc_id, tk, unnest(generate_series(1, greatest(len(tk) - 2, 0))) AS i FROM toks)) "
+
+  /** `documents` with its source's row count `cnt`, the smallest source's
+    * `min_cnt` (tiny per-source aggregates broadcast back) and the md5
+    * hash gate on doc_id in [0, 1) — the same rows survive on any engine
+    * or cluster layout. q76 and q106 differ only in the acceptance rate
+    * they compare `gate` against. */
+  private def mixGated(s: SparkSession, d: String): DataFrame = {
+    val docs = Tables(s, d, "documents")
+    val cnts = docs.groupBy("source").agg(count(lit(1)).as("cnt"))
+    val target = cnts.agg(min("cnt").as("min_cnt"))
+    docs.join(broadcast(cnts), "source").crossJoin(broadcast(target))
+      .withColumn("gate",
+        (conv(expr("substring(md5(CAST(doc_id AS STRING)), 1, 4)"), 16, 10)
+          .cast("int") % 10000) / lit(10000.0))
+  }
+
+  /** q42's quality score in [0,1] as (doc_id, score): length saturation +
+    * lexical diversity + stopword density — the standard cheap
+    * pre-filter shape for corpus cleaning, shared by q42 and q83. */
+  private def qualityScores(s: SparkSession, d: String): DataFrame =
+    Tables(s, d, "documents")
+      .withColumn("toks", expr("split(text, ' ')"))
+      .withColumn("n", expr("size(toks)"))
+      .withColumn("en_c", expr(s"size(filter(toks, x -> x IN $enList))"))
+      .withColumn("score", expr(
+        "round(0.4 * least(1.0, n / 100.0) " +
+          "+ 0.3 * (size(array_distinct(toks)) / n) " +
+          "+ 0.3 * least(1.0, en_c * 5.0 / n), 6)"))
+      .select("doc_id", "score")
+
+  /** [[qualityScores]]' score in DuckDB, arithmetic identical. */
+  private val duckQualityScore =
+    "round(0.4 * least(1.0, len(string_split(text, ' ')) / 100.0) " +
+      "+ 0.3 * (len(list_distinct(string_split(text, ' '))) / len(string_split(text, ' '))) " +
+      s"+ 0.3 * least(1.0, len(list_filter(string_split(text, ' '), x -> x IN $enList)) " +
+      "* 5.0 / len(string_split(text, ' '))), 6) AS score "
 
   val specs: Seq[QuerySpec] = Seq(
 
@@ -63,24 +125,12 @@ object TextSuite {
         "CAST(sum(CASE WHEN pred = lang THEN 1 ELSE 0 END) AS BIGINT) AS agree " +
         "FROM y GROUP BY pred ORDER BY pred")),
 
-    // Quality score in [0,1]: length saturation + lexical diversity +
-    // stopword density — the standard cheap pre-filter shape for corpus
-    // cleaning, arithmetic identical in both engines.
+    // Quality score in [0,1] ([[qualityScores]]), arithmetic identical in
+    // both engines.
     QuerySpec("q42_quality_score",
-      (s, d) => Tables(s, d, "documents")
-        .withColumn("toks", expr("split(text, ' ')"))
-        .withColumn("n", expr("size(toks)"))
-        .withColumn("en_c", expr(s"size(filter(toks, x -> x IN $enList))"))
-        .withColumn("score", expr(
-          "round(0.4 * least(1.0, n / 100.0) " +
-            "+ 0.3 * (size(array_distinct(toks)) / n) " +
-            "+ 0.3 * least(1.0, en_c * 5.0 / n), 6)"))
-        .select("doc_id", "score")
+      (s, d) => qualityScores(s, d)
         .orderBy(col("score").desc, col("doc_id")).limit(50),
-      Some("SELECT doc_id, round(0.4 * least(1.0, len(string_split(text, ' ')) / 100.0) " +
-        "+ 0.3 * (len(list_distinct(string_split(text, ' '))) / len(string_split(text, ' '))) " +
-        s"+ 0.3 * least(1.0, len(list_filter(string_split(text, ' '), x -> x IN $enList)) " +
-        "* 5.0 / len(string_split(text, ' '))), 6) AS score " +
+      Some("SELECT doc_id, " + duckQualityScore +
         "FROM documents ORDER BY score DESC, doc_id LIMIT 50")),
 
     // TF-IDF top terms per document, pure SQL: tf from one explode+agg,
@@ -193,19 +243,11 @@ object TextSuite {
     // per-source count aggregate (broadcast back), then one linear
     // filtered scan — no shuffle of the corpus itself.
     QuerySpec("q76_domain_mix",
-      (s, d) => {
-        val docs = Tables(s, d, "documents")
-        val cnts = docs.groupBy("source").agg(count(lit(1)).as("cnt"))
-        val target = cnts.agg(min("cnt").as("min_cnt"))
-        docs.join(broadcast(cnts), "source").crossJoin(broadcast(target))
-          .withColumn("gate",
-            (conv(expr("substring(md5(CAST(doc_id AS STRING)), 1, 4)"), 16, 10)
-              .cast("int") % 10000) / lit(10000.0))
-          .filter(col("gate") < col("min_cnt") / col("cnt"))
-          .groupBy("source")
-          .agg(max("cnt").as("cnt"), count(lit(1)).as("kept"))
-          .orderBy("source")
-      },
+      (s, d) => mixGated(s, d)
+        .filter(col("gate") < col("min_cnt") / col("cnt"))
+        .groupBy("source")
+        .agg(max("cnt").as("cnt"), count(lit(1)).as("kept"))
+        .orderBy("source"),
       Some("WITH c AS (SELECT source, count(*) AS cnt FROM documents GROUP BY source), " +
         "m AS (SELECT min(cnt) AS min_cnt FROM c) " +
         "SELECT d.source AS source, max(c.cnt) AS cnt, count(*) AS kept " +
@@ -224,20 +266,12 @@ object TextSuite {
     // shape as q76: tiny per-source stats broadcast back, one linear
     // filtered scan — the corpus itself never shuffles.
     QuerySpec("q106_temperature_mix",
-      (s, d) => {
-        val docs = Tables(s, d, "documents")
-        val cnts = docs.groupBy("source").agg(count(lit(1)).as("cnt"))
-        val target = cnts.agg(min("cnt").as("min_cnt"))
-        docs.join(broadcast(cnts), "source").crossJoin(broadcast(target))
-          .withColumn("gate",
-            (conv(expr("substring(md5(CAST(doc_id AS STRING)), 1, 4)"), 16, 10)
-              .cast("int") % 10000) / lit(10000.0))
-          .filter(col("gate") < sqrt(col("min_cnt") / col("cnt")))
-          .groupBy("source")
-          .agg(max("cnt").as("cnt"), count(lit(1)).as("kept"),
-            sum("doc_id").as("keep_checksum"))
-          .orderBy("source")
-      },
+      (s, d) => mixGated(s, d)
+        .filter(col("gate") < sqrt(col("min_cnt") / col("cnt")))
+        .groupBy("source")
+        .agg(max("cnt").as("cnt"), count(lit(1)).as("kept"),
+          sum("doc_id").as("keep_checksum"))
+        .orderBy("source"),
       Some("WITH c AS (SELECT source, count(*) AS cnt FROM documents GROUP BY source), " +
         "m AS (SELECT min(cnt) AS min_cnt FROM c) " +
         "SELECT d.source AS source, max(c.cnt) AS cnt, count(*) AS kept, " +
@@ -581,15 +615,7 @@ object TextSuite {
     // HOF chain (the q80 lesson).
     QuerySpec("q83_adaptive_quality",
       (s, d) => {
-        val scored = Tables(s, d, "documents")
-          .withColumn("toks", expr("split(text, ' ')"))
-          .withColumn("n", expr("size(toks)"))
-          .withColumn("en_c", expr(s"size(filter(toks, x -> x IN $enList))"))
-          .withColumn("score", expr(
-            "round(0.4 * least(1.0, n / 100.0) " +
-              "+ 0.3 * (size(array_distinct(toks)) / n) " +
-              "+ 0.3 * least(1.0, en_c * 5.0 / n), 6)"))
-          .select("doc_id", "score")
+        val scored = qualityScores(s, d)
         val thr = scored.agg(expr("round(percentile(score, 0.25), 6)").as("thr"))
         scored.crossJoin(broadcast(thr))
           .agg(count(lit(1)).as("n_docs"),
@@ -597,11 +623,7 @@ object TextSuite {
             sum(when(col("score") >= col("thr"), col("doc_id"))).as("kept_id_sum"),
             max("thr").as("thr"))
       },
-      Some("WITH sc AS (SELECT doc_id, " +
-        "round(0.4 * least(1.0, len(string_split(text, ' ')) / 100.0) " +
-        "+ 0.3 * (len(list_distinct(string_split(text, ' '))) / len(string_split(text, ' '))) " +
-        s"+ 0.3 * least(1.0, len(list_filter(string_split(text, ' '), x -> x IN $enList)) " +
-        "* 5.0 / len(string_split(text, ' '))), 6) AS score FROM documents), " +
+      Some("WITH sc AS (SELECT doc_id, " + duckQualityScore + "FROM documents), " +
         "t AS (SELECT round(quantile_cont(score, 0.25), 6) AS thr FROM sc) " +
         "SELECT count(*) AS n_docs, " +
         "CAST(sum(CASE WHEN score >= thr THEN 1 ELSE 0 END) AS BIGINT) AS n_kept, " +
@@ -681,21 +703,7 @@ object TextSuite {
     // shape is n-independent.
     QuerySpec("q73_contamination",
       (s, d) => {
-        // Tokenize ONCE, then shingle — the transform lambda must not
-        // re-split the text per position. Docs under 3 tokens are
-        // filtered out BEFORE the sequence: Spark's sequence(1, 0)
-        // descends to [1, 0] and slice(tk, 0, 3) throws under ANSI,
-        // while DuckDB's generate_series(1, 0) is empty — the filter
-        // pins the shared absent-doc semantics.
-        val grams = Tables(s, d, "documents")
-          .filter(col("doc_id") < 200)
-          .select(col("doc_id"), expr("filter(split(text, ' '), x -> x <> '')").as("tk"))
-          .filter(expr("size(tk) >= 3"))
-          .select(col("doc_id"), explode(expr(
-            "transform(sequence(1, size(tk) - 2), " +
-              "i -> CAST(conv(substring(md5(concat_ws(' ', slice(tk, i, 3))), 1, 15), 16, 10) AS BIGINT))"))
-            .as("h"))
-          .distinct()
+        val grams = trigramHashes(Tables(s, d, "documents").filter(col("doc_id") < 200))
         val eval_ = grams.filter(col("doc_id") >= 190)
           .select(col("doc_id").as("eval_id"), col("h"))
         // eval_ids is a comma-joined STRING (sorted numerically BEFORE the
@@ -711,11 +719,7 @@ object TextSuite {
             expr("array_join(transform(ids, x -> CAST(x AS STRING)), ',')").as("eval_ids"))
           .orderBy("doc_id")
       },
-      Some("WITH toks AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk " +
-        "FROM documents WHERE doc_id < 200), " +
-        "g AS (SELECT DISTINCT doc_id, CAST(concat('0x', substr(md5(concat_ws(' ', " +
-        "tk[i], tk[i+1], tk[i+2])), 1, 15)) AS BIGINT) AS h " +
-        "FROM (SELECT doc_id, tk, unnest(generate_series(1, greatest(len(tk) - 2, 0))) AS i FROM toks)) " +
+      Some(duckTrigrams +
         "SELECT t.doc_id AS doc_id, count(DISTINCT t.h) AS shared_grams, " +
         "array_to_string(list_sort(list(DISTINCT e.doc_id)), ',') AS eval_ids " +
         "FROM g t JOIN g e ON t.h = e.h AND t.doc_id >= 10 AND t.doc_id < 190 " +
@@ -770,14 +774,7 @@ object TextSuite {
     // empty-sequence corner differs between Spark and DuckDB otherwise).
     QuerySpec("q107_novelty",
       (s, d) => {
-        val grams = Tables(s, d, "documents")
-          .select(col("doc_id"), expr("filter(split(text, ' '), x -> x <> '')").as("tk"))
-          .filter(expr("size(tk) >= 3"))
-          .select(col("doc_id"), explode(expr(
-            "transform(sequence(1, size(tk) - 2), " +
-              "i -> CAST(conv(substring(md5(concat_ws(' ', slice(tk, i, 3))), 1, 15), 16, 10) AS BIGINT))"))
-            .as("h"))
-          .distinct()
+        val grams = trigramHashes(Tables(s, d, "documents"))
         val freq = grams.groupBy("h").agg(count(lit(1)).as("df"))
         grams.join(freq, "h")
           .groupBy("doc_id")

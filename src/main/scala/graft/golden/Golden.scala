@@ -85,7 +85,7 @@ object GoldenMain {
     val withCentrality = args.contains("--centrality")
     val spark: SparkSession = graft.Sessions.local("graft-golden")
     Files.createDirectories(Paths.get(outDir))
-    val graphs = EgoGraphs.load(spark, "/root/reference/data")
+    val graphs = EgoGraphs.load(spark, graft.snap.GraphSuite.dataDir)
     Golden.render(graphs, withCentrality).foreach { case (ego, out) =>
       Files.writeString(Paths.get(s"$outDir/$ego.proofs"), out.proofs)
       Files.writeString(Paths.get(s"$outDir/$ego.metrics"), out.metrics)

@@ -269,7 +269,6 @@ object GraphxAnalytics {
     * oracles (unrolled-CTE power iteration) instead of rows-only checks,
     * where double arithmetic would drift with summation order. */
   val RankScale = 1000000000000L
-  private val RankReset = 15L * RankScale / 100L
 
   /** ENFORCED form of the fixed-point magnitude bound (r11 verdict item
     * 4 — previously Scaladoc prose, silent Long overflow past it): total
@@ -395,6 +394,24 @@ object GraphxAnalytics {
     }
   }
 
+  /** The tail every fixed-point rank entry shares: [[iterateFixed]] over
+    * `g` with teleport mass `scale` at `src` (every vertex when None),
+    * then `shape` over the final (id, rank_fp) vertices, cached and
+    * materialized, and the iteration graph released before returning —
+    * same contract as DedupSuite.dedupClusters (the ContextCleaner
+    * reclaims the small cached DF when it's GC'd). */
+  private def fixedRanks(g: Graph[Unit, Int], iters: Int, scale: Long,
+      src: Option[VertexId])(shape: RDD[(VertexId, Long)] => DataFrame): DataFrame = {
+    val teleport = 15L * scale / 100L
+    val rg = iterateFixed(g, iters,
+      reset = vid => if (src.forall(_ == vid)) teleport else 0L,
+      init = vid => if (src.forall(_ == vid)) scale else 0L, scale = scale)
+    val out = shape(rg.vertices.map { case (vid, (_, r)) => (vid, r) }).cache()
+    out.count()
+    rg.unpersist(blocking = false)
+    out
+  }
+
   /** (ego, name, rank_fp) — deterministic PageRank over G⁺ in fixed-point
     * integer arithmetic (rank_fp = rank · 1e12, 10 iterations, reset
     * 0.15). Engine-independent by construction (see [[RankScale]]), so
@@ -405,24 +422,17 @@ object GraphxAnalytics {
       iters: Int = 10): DataFrame = {
     import s.implicits._
     val g = friendGraph(s, dataDir, egos, withEgoCenter = true)
-    val rg = iterateFixed(g, iters, _ => RankReset, _ => RankScale)
-    // Materialize the (ego-network-sized) output, then release the final
-    // iteration's cached graph — same contract as DedupSuite.dedupClusters
-    // (the ContextCleaner reclaims the small cached DF when it's GC'd).
-    val out = rg.vertices
-      .map { case (vid, (_, r)) =>
+    fixedRanks(g, iters, RankScale, src = None) { ranks =>
+      ranks.map { case (vid, r) =>
         val i = (vid / Offset).toInt
         val n = vid % Offset
         (i, if (n == Offset - 1) "ego" else n.toString, r)
       }
-      .toDF("egoIdx", "name", "rank_fp")
-      .select(element_at(typedLit(egos), col("egoIdx") + 1).as("ego"),
-        col("name"), col("rank_fp"))
-      .orderBy("ego", "name")
-      .cache()
-    out.count()
-    rg.unpersist(blocking = false)
-    out
+        .toDF("egoIdx", "name", "rank_fp")
+        .select(element_at(typedLit(egos), col("egoIdx") + 1).as("ego"),
+          col("name"), col("rank_fp"))
+        .orderBy("ego", "name")
+    }
   }
 
   /** (name, rank_fp) — deterministic PERSONALIZED PageRank on one ego's
@@ -435,17 +445,11 @@ object GraphxAnalytics {
     import s.implicits._
     val g = friendGraph(s, dataDir, Seq(ego), withEgoCenter = false)
     val src = g.vertices.map(_._1).min()
-    val rg = iterateFixed(g, iters,
-      reset = vid => if (vid == src) RankReset else 0L,
-      init = vid => if (vid == src) RankScale else 0L)
-    val out = rg.vertices
-      .map { case (vid, (_, r)) => ((vid % Offset).toString, r) }
-      .toDF("name", "rank_fp")
-      .orderBy("name")
-      .cache()
-    out.count()
-    rg.unpersist(blocking = false)
-    out
+    fixedRanks(g, iters, RankScale, Some(src)) { ranks =>
+      ranks.map { case (vid, r) => ((vid % Offset).toString, r) }
+        .toDF("name", "rank_fp")
+        .orderBy("name")
+    }
   }
 
   /** Fixed-point PageRank over an ARBITRARY directed edge-tuple RDD —
@@ -456,35 +460,22 @@ object GraphxAnalytics {
     * scale = 1e10 (rank_fp = rank·1e10). Returns (id, rank_fp),
     * materialized; the iteration graph is released before returning. */
   def pagerankFixedEdges(s: SparkSession, edges: RDD[(VertexId, VertexId)],
-      iters: Int, scale: Long): DataFrame = {
-    import s.implicits._
-    val g = Graph.fromEdgeTuples(edges, ())
-      .partitionBy(PartitionStrategy.EdgePartition2D)
-    val rg = iterateFixed(g, iters,
-      reset = _ => 15L * scale / 100L, init = _ => scale, scale = scale)
-    val out = rg.vertices.map { case (vid, (_, r)) => (vid, r) }
-      .toDF("id", "rank_fp").cache()
-    out.count()
-    rg.unpersist(blocking = false)
-    out
-  }
+      iters: Int, scale: Long): DataFrame =
+    edgeRanks(s, edges, iters, scale, src = None)
 
   /** Fixed-point PERSONALIZED PageRank over an arbitrary directed
     * edge-tuple RDD from an explicit source — the scale sibling of
     * [[personalizedRankFixed]]. */
   def personalizedRankFixedEdges(s: SparkSession, edges: RDD[(VertexId, VertexId)],
-      src: VertexId, iters: Int, scale: Long): DataFrame = {
+      src: VertexId, iters: Int, scale: Long): DataFrame =
+    edgeRanks(s, edges, iters, scale, Some(src))
+
+  private def edgeRanks(s: SparkSession, edges: RDD[(VertexId, VertexId)],
+      iters: Int, scale: Long, src: Option[VertexId]): DataFrame = {
     import s.implicits._
     val g = Graph.fromEdgeTuples(edges, ())
       .partitionBy(PartitionStrategy.EdgePartition2D)
-    val rg = iterateFixed(g, iters,
-      reset = vid => if (vid == src) 15L * scale / 100L else 0L,
-      init = vid => if (vid == src) scale else 0L, scale = scale)
-    val out = rg.vertices.map { case (vid, (_, r)) => (vid, r) }
-      .toDF("id", "rank_fp").cache()
-    out.count()
-    rg.unpersist(blocking = false)
-    out
+    fixedRanks(g, iters, scale, src)(_.toDF("id", "rank_fp"))
   }
 
   /** (ego, name, rank) — static PageRank over G⁺ (ego spokes included). */

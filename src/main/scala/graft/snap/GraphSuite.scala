@@ -59,6 +59,20 @@ object GraphSuite {
       "FROM e JOIN adj x ON x.ego = e.ego AND x.u = e.s " +
       "JOIN adj y ON y.ego = e.ego AND y.u = e.d AND y.v = x.v GROUP BY 1,2)"
 
+  /** The diameter-2 closed-form stress-centrality oracle, over every ego
+    * or only `egos` — one truth for g04 (closed form), g07 (GraphX
+    * all-pairs BFS) and g10 (source-batched BFS). */
+  private def centralityOracle(egos: Seq[String]): String =
+    s"WITH $duckEdges, $duckCanonical " +
+      "SELECT deg.ego AS ego, deg.name AS name, " +
+      "CAST(2 * (deg.deg * (deg.deg - 1) / 2 - coalesce(eff.eff, 0)) AS BIGINT) AS centrality " +
+      "FROM deg LEFT JOIN eff ON deg.ego = eff.ego AND deg.name = eff.name " +
+      (if (egos.isEmpty) "" else egos.map(e => s"'$e'").mkString("WHERE deg.ego IN (", ", ", ") ")) +
+      "ORDER BY ego, name"
+
+  private val g07Egos = Seq("3980", "698", "414")
+  private val g10Egos = Seq("3980", "698")
+
   /** Featnames + feat + egofeat decode down to the two hypothesis keys —
     * independently re-implements SURVEY §1.3 last-wins semantics. */
   private val duckDecode =
@@ -209,11 +223,7 @@ object GraphSuite {
     QuerySpec("g04_centrality",
       (s, _) => GraphAnalytics.centralityClosedForm(EgoGraphs.load(s, dataDir).edges)
         .orderBy("ego", "name"),
-      Some(s"WITH $duckEdges, $duckCanonical " +
-        "SELECT deg.ego AS ego, deg.name AS name, " +
-        "CAST(2 * (deg.deg * (deg.deg - 1) / 2 - coalesce(eff.eff, 0)) AS BIGINT) AS centrality " +
-        "FROM deg LEFT JOIN eff ON deg.ego = eff.ego AND deg.name = eff.name " +
-        "ORDER BY ego, name")),
+      Some(centralityOracle(Nil))),
 
     // O8: circle overlay — membership filtered to materialized friends.
     QuerySpec("g05_circle_sizes",
@@ -244,13 +254,8 @@ object GraphSuite {
     QuerySpec("g07_centrality_pregel",
       // One distributed GraphX job over the composite union graph of the
       // three egos — edge build, BFS and σ-combination all executor-side.
-      (s, _) => graft.graphx.GraphxAnalytics.egoStress(
-        s, dataDir, Seq("3980", "698", "414")),
-      Some(s"WITH $duckEdges, $duckCanonical " +
-        "SELECT deg.ego AS ego, deg.name AS name, " +
-        "CAST(2 * (deg.deg * (deg.deg - 1) / 2 - coalesce(eff.eff, 0)) AS BIGINT) AS centrality " +
-        "FROM deg LEFT JOIN eff ON deg.ego = eff.ego AND deg.name = eff.name " +
-        "WHERE deg.ego IN ('3980', '698', '414') ORDER BY ego, name")),
+      (s, _) => graft.graphx.GraphxAnalytics.egoStress(s, dataDir, g07Egos),
+      Some(centralityOracle(g07Egos))),
 
     // O18 via the THIRD independent implementation — the Brandes-style
     // source-batched BFS (O(batch) per-vertex state, the general-graph
@@ -259,12 +264,8 @@ object GraphSuite {
     // agree on real data under the driver's gate.
     QuerySpec("g10_centrality_batched",
       (s, _) => graft.graphx.GraphxAnalytics.egoStress(
-        s, dataDir, Seq("3980", "698"), batchSize = Some(48)),
-      Some(s"WITH $duckEdges, $duckCanonical " +
-        "SELECT deg.ego AS ego, deg.name AS name, " +
-        "CAST(2 * (deg.deg * (deg.deg - 1) / 2 - coalesce(eff.eff, 0)) AS BIGINT) AS centrality " +
-        "FROM deg LEFT JOIN eff ON deg.ego = eff.ego AND deg.name = eff.name " +
-        "WHERE deg.ego IN ('3980', '698') ORDER BY ego, name")),
+        s, dataDir, g10Egos, batchSize = Some(48)),
+      Some(centralityOracle(g10Egos))),
 
     // Row 45 stretch: GraphX ConnectedComponents on the friend-only
     // graphs (non-trivial without the ego hub). Oracle: DuckDB recursive

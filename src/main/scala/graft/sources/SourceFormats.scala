@@ -3,8 +3,6 @@ package graft.sources
 import graft.{QuerySpec, Tables}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
-
 /** Source-format coverage beyond parquet and SNAP text: CSV (with header,
   * schema'd read), JSON-lines, and ORC (built-in — orc-core ships with
   * Spark), exercised as write→read round trips whose results must equal
@@ -16,14 +14,9 @@ import java.nio.file.Files
 object SourceFormats {
 
   // Round-trip files must outlive the query (the returned DataFrame reads
-  // them lazily), so they live under one JVM-lifetime root removed by a
-  // shutdown hook instead of leaking a dir per invocation.
-  private lazy val root: java.nio.file.Path = {
-    val r = Files.createTempDirectory("graft-roundtrip")
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      graft.TmpFiles.deleteRecursively(r.toString)))
-    r
-  }
+  // them lazily), so they live under one JVM-lifetime root instead of
+  // leaking a dir per invocation.
+  private lazy val root = graft.TmpFiles.jvmRoot("graft-roundtrip")
 
   private def roundTripDir(prefix: String): String =
     root.resolve(prefix).toString

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.{QuerySpec, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) multi-dimensional layout — the file-skipping lever
@@ -37,17 +37,6 @@ object ZOrderLayout {
       .withColumn("z", expr("zx + 2 * zy"))
       .drop("zx", "zy")
   }
-
-  /** Write `df` z-ordered on (x, y): range-partition + sort by the
-    * interleaved key, so each output file owns a contiguous z range — a
-    * bounded rectangle in (x, y) space for the reader's zone maps. */
-  def writeZOrdered(df: DataFrame, x: String, y: String, files: Int,
-      path: String): Unit =
-    withZ(df, x, y)
-      .repartitionByRange(files, col("z"))
-      .sortWithinPartitions("z")
-      .drop("z")
-      .write.mode("overwrite").parquet(path)
 
   val specs: Seq[QuerySpec] = Seq(
     // The interleave itself, oracled exactly: per z-region (top bits of

@@ -1,11 +1,12 @@
 package graft.streaming
 
-import graft.{Sessions, Tables}
+import graft.{Json, Sessions, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryProgress
 
 import java.util.UUID
+import scala.collection.immutable.ListMap
 
 /** Streaming micro-bench (judge r6 item 3): the batch Bench deliberately
   * excludes `s_*` entries because a file-replay `processAllAvailable`
@@ -184,11 +185,16 @@ object StreamBench {
     val join = replayed(Streams.intervalJoinFrame, "append", "s_stream_join")
     val topk = replayed(Streams.windowedTopkFrame, "complete", "s_windowed_topk")
 
-    def fmt(d: Double): String = "%.2f".format(d)
+    def f2(d: Double) = Json.Fixed(d, 2)
+    def f3(d: Double) = Json.Fixed(d, 3)
     val items = Seq(sessions, join, topk).flatten
-    val qs = items.map { i =>
-      s""""${i.name}":{"wall_sec":${"%.3f".format(i.wallSec)},"wall_min_sec":${"%.3f".format(i.wallMinSec)},"input_rows":${i.inputRows},"out_rows":${i.outRows},"batches":${i.batches},"data_batches":${i.dataBatches},"rows_per_sec":${fmt(i.rowsPerSec)},"batch_ms_p50":${fmt(i.p50Ms)},"batch_ms_mean":${fmt(i.meanMs)},"batch_ms_max":${fmt(i.maxMs)},"state_rows_max":${i.stateRowsMax}}"""
-    }.mkString("{", ",", "}")
+    val qs = ListMap(items.map { i =>
+      i.name -> ListMap("wall_sec" -> f3(i.wallSec), "wall_min_sec" -> f3(i.wallMinSec),
+        "input_rows" -> i.inputRows, "out_rows" -> i.outRows, "batches" -> i.batches,
+        "data_batches" -> i.dataBatches, "rows_per_sec" -> f2(i.rowsPerSec),
+        "batch_ms_p50" -> f2(i.p50Ms), "batch_ms_mean" -> f2(i.meanMs),
+        "batch_ms_max" -> f2(i.maxMs), "state_rows_max" -> i.stateRowsMax)
+    }: _*)
     // Headline contract (r12 verdict item 5): rows_per_sec is Σinput /
     // Σtrigger-busy time and still swings ±2–3× run-to-run on trigger
     // latency — it is INFORMATIONAL. Rounds are ranked on the stable
@@ -196,8 +202,12 @@ object StreamBench {
     // are bit-stable post-orderMtimes (asserted across replays), and
     // wall_sec — the declared headline — is the median of `Replays` warm
     // replays (a fresh-JVM single replay is warmup-dominated).
-    val json =
-      s"""{"metric":"streaming_micro_bench","unit":"mixed","sf":"$sfDir","chunks":$chunks,"max_files_per_trigger":1,"protocol":"warmup+median-of-$Replays","failed":$failed,"headline":"wall_sec","stable_fields":["wall_sec","out_rows","state_rows_max"],"informational_fields":["rows_per_sec","batch_ms_p50","batch_ms_mean","batch_ms_max"],"queries":$qs}"""
+    val json = Json(ListMap("metric" -> "streaming_micro_bench", "unit" -> "mixed",
+      "sf" -> sfDir, "chunks" -> chunks, "max_files_per_trigger" -> 1,
+      "protocol" -> s"warmup+median-of-$Replays", "failed" -> failed,
+      "headline" -> "wall_sec", "stable_fields" -> Seq("wall_sec", "out_rows", "state_rows_max"),
+      "informational_fields" -> Seq("rows_per_sec", "batch_ms_p50", "batch_ms_mean", "batch_ms_max"),
+      "queries" -> qs))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("streaming_bench_out.json"), json)
     println("GRAFT_STREAMBENCH_JSON")

@@ -52,18 +52,12 @@ object Streams {
 
   /** File-sink output + checkpoint dirs must OUTLIVE the query (the
     * returned DataFrame reads the landed files lazily), so they live
-    * under a JVM-lifetime root removed by a shutdown hook — the same
-    * pattern as `SourceFormats.root`. Each invocation gets a fresh
-    * subdir: a reused path + fresh checkpoint would re-land everything. */
-  private lazy val sinkRoot: java.nio.file.Path = {
-    val r = Files.createTempDirectory("graft-sink")
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      graft.TmpFiles.deleteRecursively(r.toString)))
-    r
-  }
+    * under a JVM-lifetime root. Each invocation gets a fresh subdir: a
+    * reused path + fresh checkpoint would re-land everything. */
+  private lazy val sinkRoot = graft.TmpFiles.jvmRoot("graft-sink")
 
   /** Build the replayed stream, run `f` over it, then remove the replay
-    * temp dir (the memory sink owns the results by then). */
+    * temp dir (the sink owns the results by then). */
   private def withReplay(s: SparkSession, sfDir: String, duplicate: Boolean)(
       f: DataFrame => DataFrame): DataFrame = {
     val dir = replayDir(s, sfDir, chunks = 8, duplicate)
@@ -149,6 +143,25 @@ object Streams {
       .groupBy(window(col("ts"), "6 hours"))
       .agg(expr("approx_top_k(event_type, 10, 100)").as("top"))
 
+  /** The oracle of the batch entry `name`, which a stream's result must
+    * equal (batch-stream equivalence). */
+  private def batchOracle(name: String): Option[String] =
+    graft.relational.RelationalSuite.byName(name).duckSql
+
+  /** The gaps-and-islands batch formulation of 10-minute per-user
+    * sessions — one oracle for the three session entries (session_window,
+    * flatMapGroupsWithState, transformWithState). */
+  private val sessionOracle =
+    "WITH o AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, " +
+      "lag(CAST(ts AS TIMESTAMP)) OVER (PARTITION BY user_id " +
+      "ORDER BY CAST(ts AS TIMESTAMP), event_id) AS prev FROM events), " +
+      "m AS (SELECT user_id, ts, sum(CASE WHEN prev IS NULL " +
+      "OR ts - prev >= INTERVAL 10 MINUTE THEN 1 ELSE 0 END) " +
+      "OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sess FROM o) " +
+      "SELECT user_id, strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start, " +
+      "count(*) AS n_events FROM m GROUP BY user_id, sess " +
+      "ORDER BY user_id, session_start"
+
   val specs: Seq[QuerySpec] = Seq(
 
     // S1: tumbling 1-hour window + watermark; complete mode ≡ the q25
@@ -163,9 +176,7 @@ object Streams {
       }.select(date_format(col("window.start"), "yyyy-MM-dd HH:00:00").as("window_start"),
         col("event_type"), col("c"))
         .orderBy("window_start", "event_type"),
-      Some("SELECT strftime(ts, '%Y-%m-%d %H:00:00') AS window_start, " +
-        "event_type, count(*) AS c FROM events " +
-        "GROUP BY window_start, event_type ORDER BY window_start, event_type")),
+      batchOracle("q25_tumbling_batch")),
 
     // Sketch aggregate INSIDE streaming state: approx_top_k per 6-hour
     // tumbling window — the one-pass mergeable heavy-hitters path running
@@ -226,30 +237,14 @@ object Streams {
         date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
         col("n_events"))
         .orderBy("user_id", "session_start"),
-      Some("WITH o AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, " +
-        "lag(CAST(ts AS TIMESTAMP)) OVER (PARTITION BY user_id " +
-        "ORDER BY CAST(ts AS TIMESTAMP), event_id) AS prev FROM events), " +
-        "m AS (SELECT user_id, ts, sum(CASE WHEN prev IS NULL " +
-        "OR ts - prev >= INTERVAL 10 MINUTE THEN 1 ELSE 0 END) " +
-        "OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sess FROM o) " +
-        "SELECT user_id, strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start, " +
-        "count(*) AS n_events FROM m GROUP BY user_id, sess " +
-        "ORDER BY user_id, session_start")),
+      Some(sessionOracle)),
 
     // S2b: the same session semantics through the ARBITRARY-state API
     // (flatMapGroupsWithState + event-time timeout) instead of the
     // built-in session_window — same gaps-and-islands oracle.
     QuerySpec("s_stateful_sessions",
       (s, d) => StatefulSessions.run(s, d),
-      Some("WITH o AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, " +
-        "lag(CAST(ts AS TIMESTAMP)) OVER (PARTITION BY user_id " +
-        "ORDER BY CAST(ts AS TIMESTAMP), event_id) AS prev FROM events), " +
-        "m AS (SELECT user_id, ts, sum(CASE WHEN prev IS NULL " +
-        "OR ts - prev >= INTERVAL 10 MINUTE THEN 1 ELSE 0 END) " +
-        "OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sess FROM o) " +
-        "SELECT user_id, strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start, " +
-        "count(*) AS n_events FROM m GROUP BY user_id, sess " +
-        "ORDER BY user_id, session_start")),
+      Some(sessionOracle)),
 
     // S2c: identical semantics through transformWithState (the Spark 4
     // successor API: named state + explicit timers + RocksDB store) —
@@ -257,15 +252,7 @@ object Streams {
     // must agree with each other AND the batch formulation.
     QuerySpec("s_tws_sessions",
       (s, d) => TransformSessions.run(s, d),
-      Some("WITH o AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, " +
-        "lag(CAST(ts AS TIMESTAMP)) OVER (PARTITION BY user_id " +
-        "ORDER BY CAST(ts AS TIMESTAMP), event_id) AS prev FROM events), " +
-        "m AS (SELECT user_id, ts, sum(CASE WHEN prev IS NULL " +
-        "OR ts - prev >= INTERVAL 10 MINUTE THEN 1 ELSE 0 END) " +
-        "OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sess FROM o) " +
-        "SELECT user_id, strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start, " +
-        "count(*) AS n_events FROM m GROUP BY user_id, sess " +
-        "ORDER BY user_id, session_start")),
+      Some(sessionOracle)),
 
     // S4: STREAM-STREAM interval join — click→purchase attribution, the
     // canonical two-stream correlation: each side carries its own
@@ -383,21 +370,17 @@ object Streams {
       (s, d) => {
         val sub = sinkRoot.resolve(UUID.randomUUID().toString)
         val out = sub.resolve("out").toString
-        val ckpt = sub.resolve("ckpt").toString
-        val dir = replayDir(s, d, chunks = 8)
-        try {
-          val schema = Tables(s, d, "events").schema
-          val q = s.readStream.schema(schema).parquet(dir)
+        withReplay(s, d, duplicate = false) { stream =>
+          val q = stream
             .filter(col("event_type") === "click")
             .withColumn("day", to_date(col("ts")))
             .writeStream.format("parquet")
-            .option("path", out).option("checkpointLocation", ckpt)
+            .option("path", out).option("checkpointLocation", sub.resolve("ckpt").toString)
             .partitionBy("day")
             .outputMode("append").start()
           q.processAllAvailable(); q.stop()
-        } finally graft.TmpFiles.deleteRecursively(dir)
-        s.read.parquet(out)
-          .groupBy("day")
+          s.read.parquet(out)
+        }.groupBy("day")
           .agg(count(lit(1)).as("n_clicks"),
             countDistinct(col("user_id")).as("n_users"),
             sum(col("value").cast("decimal(18,6)")).cast("double").as("click_value"))
@@ -432,11 +415,7 @@ object Streams {
           .agg(count(lit(1)).as("n_users"), sum("user_id").as("user_checksum"))
           .orderBy("event_type")
       },
-      Some("WITH r AS (SELECT user_id, event_type, row_number() OVER " +
-        "(PARTITION BY user_id ORDER BY date_trunc('second', CAST(ts AS TIMESTAMP)) DESC, " +
-        "event_id DESC) AS rn FROM events) " +
-        "SELECT event_type, count(*) AS n_users, CAST(sum(user_id) AS BIGINT) AS user_checksum " +
-        "FROM r WHERE rn = 1 GROUP BY event_type ORDER BY event_type")),
+      batchOracle("q86_latest_snapshot")),
 
     // S7: Trigger.AvailableNow — the run-now-then-stop trigger for
     // batch-over-stream jobs (successor of the deprecated Trigger.Once,
@@ -468,9 +447,7 @@ object Streams {
           col("event_type"), col("c"))
           .orderBy("window_start", "event_type")
       },
-      Some("SELECT strftime(ts, '%Y-%m-%d %H:00:00') AS window_start, " +
-        "event_type, count(*) AS c FROM events " +
-        "GROUP BY window_start, event_type ORDER BY window_start, event_type")),
+      batchOracle("q25_tumbling_batch")),
 
     // S6: STATE STORE READER (Spark 4 state data source) — operational
     // observability for stateful streams: the checkpoint's state store is
@@ -483,22 +460,18 @@ object Streams {
     // state — without replaying the stream.
     QuerySpec("s_state_reader",
       (s, d) => {
-        val sub = sinkRoot.resolve(UUID.randomUUID().toString)
-        val ckpt = sub.resolve("ckpt").toString
-        val dir = replayDir(s, d, chunks = 8)
-        try {
-          val schema = Tables(s, d, "events").schema
-          val q = s.readStream.schema(schema).parquet(dir)
+        val ckpt = sinkRoot.resolve(UUID.randomUUID().toString).resolve("ckpt").toString
+        withReplay(s, d, duplicate = false) { stream =>
+          val q = stream
             .groupBy("event_type")
             .agg(count(lit(1)).as("n"), sum("user_id").as("user_sum"))
             .writeStream.format("noop")
             .option("checkpointLocation", ckpt)
             .outputMode("update").start()
           q.processAllAvailable(); q.stop()
-        } finally graft.TmpFiles.deleteRecursively(dir)
-        s.read.format("statestore").load(ckpt)
-          .select(col("key.event_type").as("event_type"),
-            col("value.count").as("n"), col("value.sum").as("user_sum"))
+          s.read.format("statestore").load(ckpt)
+        }.select(col("key.event_type").as("event_type"),
+          col("value.count").as("n"), col("value.sum").as("user_sum"))
           .orderBy("event_type")
       },
       Some("SELECT event_type, count(*) AS n, " +

@@ -1,11 +1,13 @@
 package graft.tools
 
-import graft.Sessions
+import graft.{Json, Sessions}
 import graft.graphx.{GraphxAnalytics, StressCentrality}
 import graft.snap.GraphSuite
 import org.apache.spark.graphx.VertexId
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.functions._
+
+import scala.collection.immutable.ListMap
 
 /** At-scale evidence for the GraphX surface (r12 verdict item 1): every
   * graph entry runs on ego networks ≤ 1035 nodes, so the 100 TB claims
@@ -268,15 +270,14 @@ object GraphScale {
     // ---- artifact --------------------------------------------------------
     phase("dump")
     val heapMax = Runtime.getRuntime.maxMemory() / (1L << 20)
-    def fmt(d: Double) = "%.2f".format(d)
-    val json =
-      s"""{"metric":"graph_scale","topology":"$topology","copies":$copies,"iters":$iters,"scale_fp":$ScaleAt1M,"cc_branch":"$ccBranch",""" +
-        s""""heap_mb":$heapMax,"cpus":${Runtime.getRuntime.availableProcessors},""" +
-        facts.map { case (k, v) => "\"" + k + "\":" + v }.mkString("", ",", ",") +
-        s""""walls_sec":${walls.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")},""" +
-        s""""cc_star_round_walls_sec":${ccRoundWalls.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")},""" +
-        s""""stress_phase_walls_sec":${stressPhases.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")},""" +
-        s""""replay_check":"run tools/graph_scale_check.py $outDir $iters $ScaleAt1M"}"""
+    def secs(walls: collection.Map[String, Double]) =
+      ListMap(walls.toSeq.map { case (k, v) => k -> Json.Fixed(v, 2) }: _*)
+    val json = Json(ListMap[String, Any]("metric" -> "graph_scale", "topology" -> topology,
+      "copies" -> copies, "iters" -> iters, "scale_fp" -> ScaleAt1M, "cc_branch" -> ccBranch,
+      "heap_mb" -> heapMax, "cpus" -> Runtime.getRuntime.availableProcessors) ++ facts ++
+      ListMap("walls_sec" -> secs(walls), "cc_star_round_walls_sec" -> secs(ccRoundWalls),
+        "stress_phase_walls_sec" -> secs(stressPhases),
+        "replay_check" -> s"run tools/graph_scale_check.py $outDir $iters $ScaleAt1M"))
     // The directed edge list LAST (it is the biggest dump and the checker
     // needs it): exactly what the iterations consumed.
     directed.toDF("u", "v").write.mode("overwrite").parquet(s"$outDir/edges.parquet")

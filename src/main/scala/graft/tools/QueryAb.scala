@@ -1,6 +1,8 @@
 package graft.tools
 
-import graft.{Sessions, SparkEntry}
+import graft.{Json, Sessions, SparkEntry}
+
+import scala.collection.immutable.ListMap
 
 /** Query timing in one session — the iteration loop for plan tuning and
   * the same-JVM A/B for declared-query reshapes. Cross-JVM walls swing
@@ -45,16 +47,14 @@ object QueryAb {
     arms.indices.foreach(timeArm)
     val walls = (1 to rounds).map(_ => arms.indices.map(timeArm)).transpose
 
-    def fmt(d: Double) = "%.3f".format(d)
+    def f3(d: Double) = Json.Fixed(d, 3)
     val perArm = names.zip(walls).map { case (n, w) =>
-      s""""$n":{"walls_sec":${w.map(fmt).mkString("[", ",", "]")},""" +
-        s""""min":${fmt(w.min)},"median":${fmt(w.sorted.apply(w.size / 2))}}"""
+      n -> ListMap("walls_sec" -> w.map(f3), "min" -> f3(w.min), "median" -> f3(w.sorted.apply(w.size / 2)))
     }
     val speedup =
-      if (walls.size == 2) s""","speedup_min_over_min":${fmt(walls(0).min / walls(1).min)}""" else ""
+      if (walls.size == 2) Seq("speedup_min_over_min" -> f3(walls(0).min / walls(1).min)) else Nil
     println("GRAFT_QUERYAB_JSON")
-    println(s"""{"metric":"query_ab","sf_dir":"$sfDir",""" +
-      s"""${perArm.mkString(",")}$speedup}""")
+    println(Json(ListMap[String, Any]("metric" -> "query_ab", "sf_dir" -> sfDir) ++ perArm ++ speedup))
     spark.stop()
   }
 }

@@ -1,9 +1,11 @@
 package graft.tools
 
-import graft.{Sessions, Tables}
+import graft.{Json, Sessions, Tables}
 import graft.ext.{DedupSuite, SimilaritySuite}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.collection.immutable.ListMap
 
 /** At-scale gates for the APPROXIMATE operators (r9 verdict item 4): the
   * exact surface has sf1/sf10 oracle evidence, but the recall/collapse
@@ -38,12 +40,6 @@ object RecallGate {
 
   /** The derive_scale.py vec_id copy offset (id-shifted exact duplicates). */
   private val CopyOffset = 100000L
-
-  /** The embeddings corpus as (vec_id, arr DOUBLE[]) — the exact-scoring
-    * representation every recall computation runs against. */
-  private def vecBase(s: SparkSession, d: String): DataFrame =
-    Tables(s, d, "embeddings")
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("arr"))
 
   /** Probe ids spanning distinct copies of the derived fixture: two
     * base-copy probes plus one per later copy (up to two). */
@@ -94,7 +90,8 @@ object RecallGate {
     import spark.implicits._
     val k = 10
 
-    val base0 = vecBase(spark, sfDir)
+    // The exact-scoring representation every recall computation runs against.
+    val base0 = SimilaritySuite.corpus(spark, sfDir)
     val nVecs = base0.count()
     // Probes span distinct copies of the derived fixture (offset 100000).
     val probes: Seq[Long] = copyProbes(spark, base0)
@@ -244,14 +241,11 @@ object RecallGate {
     val (results, failures, probes) = run(spark, sfDir)
     val nVecs = results("n_vecs").toLong
 
-    def fmt(d: Double) = "%.4f".format(d)
     // n_vecs is emitted once, as the integer header field (ADVICE r11:
     // the results-map copy previously duplicated the key).
-    val body = results.filter(_._1 != "n_vecs")
-      .map { case (n, v) => "\"" + n + "\":" + fmt(v) }.mkString(",")
-    val json = s"""{"sf":"$sfDir","n_vecs":$nVecs,""" +
-      s""""probes":[${probes.mkString(",")}],""" +
-      s""""pass":${failures.isEmpty},"failures":[${failures.map("\"" + _ + "\"").mkString(",")}],$body}"""
+    val json = Json(ListMap[String, Any]("sf" -> sfDir, "n_vecs" -> nVecs, "probes" -> probes,
+      "pass" -> failures.isEmpty, "failures" -> failures) ++
+      results.filter(_._1 != "n_vecs").map { case (n, v) => n -> Json.Fixed(v, 4) })
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json)
     println("GRAFT_RECALL_JSON")
     println(json)

@@ -11,3 +11,11 @@ object TestSpark {
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 }
+
+object SparkSuite {
+  /** One line naming a failure: its class and the first line of its
+    * message (Spark messages run to many lines of plan and context). */
+  def cause(e: Throwable): String =
+    s"${e.getClass.getSimpleName}: " +
+      Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+}

@@ -4,6 +4,8 @@ import graft.SparkSuite
 import org.apache.spark.sql.GraftPlanProbe
 import org.apache.spark.sql.catalyst.plans.logical.Window
 
+import scala.util.control.NonFatal
+
 /** The no-new-scale-killer gate: a `Window` with an EMPTY partition spec
   * moves its entire input through ONE task (the q116 lesson), so every
   * such window anywhere in the surface must read a table whose size is
@@ -58,7 +60,9 @@ class BoundedWindowSpec extends SparkSuite {
 
   test("every partition-less Window reads a named bounded-grain input") {
     val violations = Seq.newBuilder[String]
-    for (spec <- graft.SparkEntry.allSpecs if !spec.name.startsWith("s_")) {
+    // A spec that fails to build or plan is recorded and the walk goes on,
+    // so one failure cannot hide every later spec in allSpecs.
+    for (spec <- graft.SparkEntry.allSpecs if !spec.name.startsWith("s_")) try {
       val df = spec.run(spark, sf)
       val globals = df.queryExecution.optimizedPlan.collect {
         case w: Window if w.partitionSpec.isEmpty => w
@@ -76,7 +80,7 @@ class BoundedWindowSpec extends SparkSuite {
                 s"exceeds the documented $grain bound $maxRows"
         }
       }
-    }
+    } catch { case NonFatal(e) => violations += s"${spec.name}: ${SparkSuite.cause(e)}" }
     val v = violations.result()
     assert(v.isEmpty, v.mkString("\n", "\n", ""))
   }

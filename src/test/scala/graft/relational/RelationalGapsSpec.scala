@@ -3,6 +3,8 @@ package graft.relational
 import graft.{SparkSuite, Tables}
 import org.apache.spark.sql.functions._
 
+import scala.util.control.NonFatal
+
 class RelationalGapsSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
@@ -131,10 +133,16 @@ class RelationalGapsSpec extends SparkSuite {
   }
 
   test("every declared query runs at sf0.001 and respects its schema") {
-    graft.SparkEntry.allSpecs.foreach { spec =>
-      val df = spec.run(spark, sf)
-      assert(df.columns.nonEmpty, spec.name)
-      assert(df.limit(1).count() >= 0, spec.name)
+    // Every spec is checked even after one fails, and the failure names
+    // all of them: stopping at the first would leave every later suite
+    // in allSpecs unchecked behind an already-known failure.
+    val failures = graft.SparkEntry.allSpecs.flatMap { spec =>
+      try {
+        val df = spec.run(spark, sf)
+        if (df.columns.isEmpty) Some(s"${spec.name}: no output columns")
+        else { df.limit(1).count(); None }
+      } catch { case NonFatal(e) => Some(s"${spec.name}: ${SparkSuite.cause(e)}") }
     }
+    assert(failures.isEmpty, failures.mkString(s"${failures.size} specs failed:\n", "\n", ""))
   }
 }

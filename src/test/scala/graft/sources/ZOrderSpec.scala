@@ -1,10 +1,22 @@
 package graft.sources
 
 import graft.{SparkSuite, Tables, TmpFiles}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class ZOrderSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.01"
+
+  /** Write `df` z-ordered on (x, y): range-partition + sort by the
+    * interleaved key, so each output file owns a contiguous z range — a
+    * bounded rectangle in (x, y) space for the reader's zone maps. */
+  private def writeZOrdered(df: DataFrame, x: String, y: String, files: Int,
+      path: String): Unit =
+    ZOrderLayout.withZ(df, x, y)
+      .repartitionByRange(files, col("z"))
+      .sortWithinPartitions("z")
+      .drop("z")
+      .write.mode("overwrite").parquet(path)
 
   test("z-ordered files bound BOTH dimensions; key-sorted files bound only one") {
     // The property zone-map file skipping depends on: after a z-ordered
@@ -16,7 +28,7 @@ class ZOrderSpec extends SparkSuite {
       val src = Tables(spark, sf, "lineitem")
         .select((col("l_partkey") % 256).as("x"), (col("l_suppkey") % 256).as("y"))
       val files = 16
-      ZOrderLayout.writeZOrdered(src, "x", "y", files, s"$dir/z")
+      writeZOrdered(src, "x", "y", files, s"$dir/z")
       src.repartitionByRange(files, col("x")).sortWithinPartitions("x")
         .write.mode("overwrite").parquet(s"$dir/byx")
 
